@@ -14,12 +14,11 @@ import json
 PYTHON_ACCUMS = {
     "time to run Python workers": "python.run_s",
     "time to initialize Python workers": "python.init_s",
-    "time to start Python workers": "python.boot_s",
     "data sent to Python workers": "python.bytes_sent",
     "data returned from Python workers": "python.bytes_returned",
 }
-# the three timings are SQL timing metrics, reported in milliseconds
-MS_ACCUMS = {"python.run_s", "python.init_s", "python.boot_s"}
+# the timings are SQL timing metrics, reported in milliseconds
+MS_ACCUMS = {"python.run_s", "python.init_s"}
 
 SPARK_KEYS = (
     "spark.jobs", "spark.streaming_jobs", "spark.stages", "spark.tasks", "spark.failed_tasks",
