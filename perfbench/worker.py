@@ -41,6 +41,16 @@ def steal_s() -> float:
         return 0.0
 
 
+def calibrate() -> float:
+    """Seconds a fixed pure-Python loop takes: how fast the host runs
+    right now, independent of the engine under test."""
+    t0 = time.perf_counter()
+    x = 0
+    for i in range(200_000):
+        x = (x * 31 + i) & 0xFFFFFFFF
+    return time.perf_counter() - t0
+
+
 def setup(cfg: dict, counters=None):
     """Process start to a ready session: JVM start, a warm-up action and
     the catalog import. With ``counters``, the layer wrappers go in first.
@@ -65,7 +75,7 @@ def setup(cfg: dict, counters=None):
 
 
 def run_workload(cfg: dict, spark, counters) -> dict:
-    from perfbench.workloads import PASS_S, WORKLOADS, Context
+    from perfbench.workloads import PASS_S, WARMUP_PASSES, WORKLOADS, Context
 
     ctx = Context(spark, cfg["sf_dir"], cfg["work_dir"], cfg["seed"])
     ops = WORKLOADS[cfg["workload"]]()
@@ -74,19 +84,20 @@ def run_workload(cfg: dict, spark, counters) -> dict:
     failures: list[str] = []
     attempted = 0
 
-    # untimed warm-up pass, which also checks every output against its pin
+    # untimed warm-up passes; the first checks every output against its pin
     t_warm = time.perf_counter()
-    for op in rng.sample(ops, len(ops)):
-        attempted += 1
-        try:
-            _, digests = op.run(ctx, check=True)
-        except Exception as e:  # noqa: BLE001 — a failing op costs its slot
-            failures.append(f"{op.name}: {type(e).__name__}: {str(e)[:300]}")
-            continue
-        bad = {k: v for k, v in digests.items() if pins.get(k) != v}
-        if bad:
-            failures.append(f"{op.name}: digest {bad} != pins "
-                            f"{ {k: pins.get(k) for k in bad} }")
+    for i in range(WARMUP_PASSES[cfg["workload"]]):
+        for op in rng.sample(ops, len(ops)):
+            attempted += 1
+            try:
+                _, digests = op.run(ctx, check=i == 0)
+            except Exception as e:  # noqa: BLE001 — a failing op costs its slot
+                failures.append(f"{op.name}: {type(e).__name__}: {str(e)[:300]}")
+                continue
+            bad = {k: v for k, v in digests.items() if pins.get(k) != v}
+            if bad:
+                failures.append(f"{op.name}: digest {bad} != pins "
+                                f"{ {k: pins.get(k) for k in bad} }")
     warmup_s = time.perf_counter() - t_warm
 
     # closed loop, one client, whole passes
@@ -95,6 +106,7 @@ def run_workload(cfg: dict, spark, counters) -> dict:
     pass_walls: list[float] = []
     steal0 = steal_s()
     t_begin = time.perf_counter()
+    cal_s = [calibrate() for _ in range(3)]
     while len(pass_walls) < n_passes:
         t_pass = time.perf_counter()
         for op in rng.sample(ops, len(ops)):
@@ -117,8 +129,9 @@ def run_workload(cfg: dict, spark, counters) -> dict:
                     row[f"{k}_s"] = secs1[k] - secs0.get(k, 0.0)
             rows.append(row)
         pass_walls.append(time.perf_counter() - t_pass)
+        cal_s += [calibrate() for _ in range(3)]
     return {"rows": rows, "pass_walls": pass_walls, "attempted": attempted,
-            "failures": failures, "warmup_s": warmup_s,
+            "cal_s": cal_s, "failures": failures, "warmup_s": warmup_s,
             "steal_s": steal_s() - steal0, "measured_s": time.perf_counter() - t_begin}
 
 
