@@ -26,29 +26,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-# Isolate this bench run's oracle_aux / bucketed tables from any
-# concurrently running gate/sweep/pytest process (VERDICT r13 task 4:
-# queries.py bakes the id at import; two processes sharing the default
-# dir race on overwrite and a random streaming query fails with "No
-# files found" — seen once in the r13 freeze sweep). Cleaned up atexit.
-os.environ.setdefault("SPARK_GRAFT_RUN_ID", f"bench-{os.getpid()}")
-
-import atexit  # noqa: E402
-import glob as _glob  # noqa: E402
-import shutil as _shutil  # noqa: E402
-
-from finance_reporting_etl_spark.queries import CATALOG  # noqa: E402
-from finance_reporting_etl_spark.queries import _AUX_DIR  # noqa: E402
+from finance_reporting_etl_spark.runs import start_run  # noqa: E402
 from finance_reporting_etl_spark.session import get_spark  # noqa: E402
-
-
-@atexit.register
-def _cleanup_aux() -> None:
-    if "bench-" in _AUX_DIR:
-        _shutil.rmtree(_AUX_DIR, ignore_errors=True)
-    run = os.environ["SPARK_GRAFT_RUN_ID"].replace("-", "_")
-    for d in _glob.glob(f"/root/repo/spark-warehouse/bkt_*_{run}"):
-        _shutil.rmtree(d, ignore_errors=True)
 
 # Headliners: the reference-parity marts, the TPC-H-shaped joins/aggs,
 # and each extension-operator family at its most expensive.
@@ -501,7 +480,8 @@ assert set(PANEL) <= set(HEADLINE), sorted(set(PANEL) - set(HEADLINE))
 assert len(PANEL) == len(set(PANEL))
 
 
-# Per-round measurement notes carried into BENCH_DETAIL.json.
+# Standing measurement notes carried into BENCH_DETAIL.json; the
+# per-query history of earlier rounds lives in PLANS.md.
 NOTES = {
     "_round_interpretation": (
         "The HEADLINE total grows with the catalog every round (312 "
@@ -513,128 +493,20 @@ NOTES = {
         "spread on a shared box is ±30% at sf0.1 (PLANS.md) — read "
         "trends, not single samples."
     ),
-    "ingest_pages_datasource": (
-        "r10 quiet-box re-measure (VERDICT r9 task 2): best-of-3 = "
-        "0.60s (runs 6.72/0.60/0.60 — the first run pays Python "
-        "DataSource registration + worker startup) vs 1.42s (r8) / "
-        "2.95s (r9 driver box). The 2.08x r9 delta was box variance "
-        "landing on the startup-heavy first sample; the plan is "
-        "unchanged (0 exchanges). No redesign warranted."
-    ),
-    "minhash_lsh_near_dup": (
-        "r10 quiet-box re-measure (VERDICT r9 task 2): best-of-3 = "
-        "2.18s vs 2.36s (r8) / 3.76s (r9 driver box) — the post-"
-        "det_round plan is not slower than r8's; the 1.60x r9 delta "
-        "was box variance. Plan unchanged (1 shuffle + 3 broadcasts)."
-    ),
-    "_r13_panel_datum": (
-        "r13 panel datum (VERDICT r12 task 5 — box series kept "
-        "separate): QUIET-BOX 71.15s / 72.16s (two same-tree samples) "
-        "over the pinned 51-query panel, vs quiet-box r12 "
-        "80.90/81.29s — a ~12% same-box improvement in a tight band; "
-        "the DRIVER-BOX series reads 68.27s (r11) -> 65.95s (r12) and "
-        "gets its r13 datum from the driver's own BENCH_r13 run. Do "
-        "not mix the two series in one trend line."
-    ),
-    "lsh_band_sweep_recall": (
-        "r13 quiet-box interleaved best-of-5 (VERDICT r12 task 6, "
-        "sibling = unchanged minhash_lsh_near_dup in the same runs): "
-        "3.35s vs sibling 2.11s; r11 bench 3.04s, r12 bench 3.74s. "
-        "The measured stable value sits between the two bench samples "
-        "and inside the documented +/-30% band; plan unchanged across "
-        "r11->r13 PLAN_AUDITs (8 shuffles / 7 broadcasts / 1 "
-        "SinglePartition at every commit). Box drift, not plan drift; "
-        "the sibling itself moved 1.80 -> 2.11s between two "
-        "back-to-back quiet-box sessions, which is the noise floor."
-    ),
-    "lsh_compaction_delta": (
-        "r13 quiet-box interleaved best-of-5: 3.20s vs sibling 2.11s; "
-        "r11 bench 2.71s, r12 bench 3.28s. Plan unchanged across "
-        "r11->r13 (6 shuffles / 0 broadcasts). Between the bench "
-        "samples, inside the band — box drift disposition, same "
-        "evidence as lsh_band_sweep_recall."
-    ),
-    "semantic_dedup": (
-        "r13 quiet-box interleaved best-of-5: 2.69s vs sibling 2.11s; "
-        "r11 bench 2.42s, r12 bench 2.97s. Plan unchanged across "
-        "r11->r13 (6 shuffles / 2 broadcasts). Between the bench "
-        "samples, inside the band — box drift disposition."
-    ),
-    "hnsw_layer_reciprocity": (
-        "r11 quiet-box interleaved best-of-3 = 5.12s vs sibling "
-        "knn_graph_reciprocity 4.28s on the same runs (bench recorded "
-        "4.79s / 4.74s). The +0.8s over the sibling is the persisted "
-        "scored-pair write plus the second (layer-1) ranking pass — "
-        "both passes re-read one parquet cache, so the multi-million-"
-        "pair Arrow cosine runs once. A one-shot cold sample measured "
-        "9.2s (Python-worker + codegen warm-up landing on the sample, "
-        "the ingest_pages_datasource effect) — plan unchanged, no "
-        "redesign warranted."
-    ),
-    "part_copurchase_pagerank": (
-        "r8 quiet-box re-measure (VERDICT r7 task 6): best-of-3 = 7.67s "
-        "vs 6.2s (r6) / 8.1s (r7). The 8 fixed join+agg power iterations "
-        "over the persisted, src-partitioned edge table are unchanged "
-        "(broadcast rank table, map-side-combined groupBy(dst) is the "
-        "only per-iteration exchange); the +1.5s vs r6 tracks "
-        "round-over-round box variance on this 140-stage job, not a "
-        "plan change — no redesign warranted."
-    ),
-    "streaming_kmv_sketch_maintain": (
-        "r12 quiet-box interleaved best-of-3 (VERDICT r11 task 5): "
-        "5.72s (runs 7.71/7.34/5.72) vs 5.17s (r10) / 6.24s (r11); the "
-        "unchanged sibling streaming_poisson_alarm measured 2.25s on "
-        "the SAME runs vs its 1.76s r11 bench sample, i.e. the whole "
-        "streaming family read ~1.3x slower on this box-day. "
-        "Sibling-normalized the query sits at ~4.5s — at or below its "
-        "r10 datum. Plan unchanged (3-micro-batch KMV fold, one "
-        "per-batch shuffle); box variance, no redesign warranted."
-    ),
-    "_r14_optimization_round": (
-        "r14 is optimization round 1: see OPTIMIZATION_r14.md for the "
-        "per-operator before/after evidence. Build-box full-bench "
-        "panel samples this round: 66.40s (mid-round) and 72.16s "
-        "(end-of-round, with UNTOUCHED controls up ~8-15% in the same "
-        "run — box drift, not code; r13 read 72.33 driver-box / "
-        "71.15-72.16 quiet-box). CANONICAL SERIES DECISION (VERDICT "
-        "r13 task 5): the box series had numerically converged, so "
-        "from r14 on the canonical round-over-round panel series is "
-        "the DRIVER's own BENCH_rNN runs; build-box samples in "
-        "OPTIMIZATION_rNN.md are within-round paired A/B evidence "
-        "only, never trend points."
-    ),
-    "dedup_clusters": (
-        "r13 flagged 3.19->5.94s (1.86x, VERDICT task 2). Disposition "
-        "closed by a FIX, not a wave-through: the r14 optimization "
-        "round removed the per-pair array_union and the double "
-        "tokenization from the jaccard verify leg "
-        "(OPTIMIZATION_r14.md batch 1/7); r14 mid-round full bench "
-        "reads 3.24s, below every prior datum."
-    ),
-    "bloom_fpr_sweep": (
-        "r14 mid-round bench read 2.91s vs 2.47 (r13) — the only "
-        ">15% upward mover left after the pps fix. Plan unchanged "
-        "(PLAN_AUDIT counts stable, query untouched this round), "
-        "inside the documented +/-30% single-sample band; apply the "
-        "disposition protocol in r15 if it persists."
-    ),
     "_driver_box_ab_protocol": (
         "VERDICT r14 task 8 standing protocol: (1) builder-box A/Bs "
         "cannot settle driver-box disputes — within-round evidence is "
-        "SAME-BOX stash-paired bench_subset/full-bench pairs only; "
-        "(2) every round produces the low-core companion artifact "
-        "(BENCH_rNN_c8: the same bench at SPARK_GRAFT_CPUS=8) next to "
-        "the 32-core run; (3) drift test: untouched control queries "
-        "moving >10% at c32 while <5% at c8 means the c32 sample is "
-        "box/overhead drift — read the c8 series for that round's "
-        "round-over-round comparison."
-    ),
-    "streaming_intercompany_elimination": (
-        "r12 quiet-box interleaved best-of-3 (VERDICT r11 task 5): "
-        "5.22s (runs 5.96/5.39/5.22) vs 4.53s (r10) / 5.54s (r11), "
-        "with sibling streaming_poisson_alarm at 2.25s vs 1.76s (r11) "
-        "on the same runs. Sibling-normalized ~4.1s — below the r10 "
-        "datum. Plan unchanged; box variance, no redesign warranted."
+        "SAME-BOX paired runs of both trees only (tools/bench_subset.py "
+        "or the full bench); (2) every round produces the low-core "
+        "companion artifact (BENCH_rNN_c8: the same bench at "
+        "SPARK_GRAFT_CPUS=8) next to the 32-core run; (3) drift test: "
+        "untouched control queries moving >10% at c32 while <5% at c8 "
+        "means the c32 sample is box/overhead drift — read the c8 "
+        "series for that round's round-over-round comparison. A single "
+        "drifting query is re-measured with tools/bench_subset.py -n3 "
+        "<unchanged sibling> <drifter...>: the interleaved passes land "
+        "box noise on both, so the sibling-normalized ratio separates "
+        "plan drift from box drift."
     ),
 }
 
@@ -675,7 +547,46 @@ def compact_line(timings: dict[str, float], sf: float, budget: int = 1700) -> st
     return json.dumps(base)
 
 
+def time_queries(
+    spark, sf_dir: str, names: list[str], passes: int = 2
+) -> tuple[dict[str, float], dict[str, str], dict[str, float]]:
+    """Force each query end-to-end with a noop sink (full computation,
+    no driver collect) in ``passes`` INTERLEAVED passes over ``names``.
+
+    Returns the best seconds of every query that succeeded at least
+    once, the last error of every query that failed at least once, and
+    each failing query's longest elapsed-at-failure. A failing query
+    costs its own slot, not the whole run: the rest keep timing (a
+    crash here left BENCH_r07 unparseable otherwise)."""
+    # imported here, not at module load: queries.py reads the run id
+    # once, at import, so the caller's start_run must come first
+    from finance_reporting_etl_spark.queries import CATALOG
+
+    best: dict[str, float] = {}
+    errors: dict[str, str] = {}
+    fail_elapsed: dict[str, float] = {}
+    for _ in range(passes):
+        for name in names:
+            spark.sparkContext.setJobDescription(name)
+            t0 = time.perf_counter()
+            try:
+                CATALOG[name].fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+            except Exception as e:  # noqa: BLE001
+                errors[name] = f"{type(e).__name__}: {e}"[:200]
+                fail_elapsed[name] = max(
+                    fail_elapsed.get(name, 0.0), time.perf_counter() - t0
+                )
+                continue
+            finally:
+                spark.sparkContext.setJobDescription(None)
+            best[name] = min(best.get(name, float("inf")), time.perf_counter() - t0)
+    return best, errors, fail_elapsed
+
+
 def main() -> None:
+    # isolate this bench run's oracle_aux / bucketed tables from any
+    # concurrently running gate/sweep/pytest process
+    start_run("bench")
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else -1.0
@@ -686,27 +597,8 @@ def main() -> None:
     # GC noise across queries; the sample count stays at 2 so totals are
     # apples-to-apples with rounds 1-2 (ADVICE r3: best-of-3 would lower
     # the headline number without any real speedup).
-    timings: dict[str, float] = {name: float("inf") for name in HEADLINE}
-    rep_errors: dict[str, str] = {}
-    fail_elapsed: dict[str, float] = {}
-    for _ in range(2):
-        for name in HEADLINE:
-            t0 = time.perf_counter()
-            # a single failing query must cost its own slot, not the
-            # whole round's numbers: record the error, keep timing the
-            # rest (a crash here left BENCH_r07 unparseable otherwise)
-            try:
-                CATALOG[name].fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            except Exception as e:  # noqa: BLE001
-                rep_errors[name] = f"{type(e).__name__}: {e}"[:200]
-                fail_elapsed[name] = max(
-                    fail_elapsed.get(name, 0.0), time.perf_counter() - t0
-                )
-                continue
-            timings[name] = min(timings[name], time.perf_counter() - t0)
-    succeeded = {
-        name: round(t, 3) for name, t in timings.items() if t != float("inf")
-    }
+    best, rep_errors, fail_elapsed = time_queries(spark, sf_dir, HEADLINE)
+    succeeded = {name: round(t, 3) for name, t in best.items()}
     # a query that failed one repetition but succeeded another keeps its
     # healthy timing and is reported as FLAKY, not as an error — a name
     # in both `timings` and `errors` made the artifact ambiguous

@@ -48,8 +48,3 @@ def return_on_assets(net_income: Column | str, total_assets: Column | str, scale
 def return_on_equity(net_income: Column | str, total_equity: Column | str, scale: int = 4) -> Column:
     """calculate_roe analog (README.md:491)."""
     return ratio(net_income, total_equity, scale)
-
-
-def debt_to_equity(total_liabilities: Column | str, total_equity: Column | str, scale: int = 4) -> Column:
-    """Leverage ratio in the same macro family (README.md:493 pattern)."""
-    return ratio(total_liabilities, total_equity, scale)

@@ -96,14 +96,6 @@ def digit_ratio(text: Column | str, scale: int = 4) -> Column:
     return det_round(_digit_ratio_raw(text), scale)
 
 
-def stopword_ratio(text: Column | str, stopwords: tuple[str, ...], scale: int = 4) -> Column:
-    """Fraction of whitespace tokens that are in the stopword list."""
-    toks = whitespace_tokens(text)
-    sw = F.array(*[F.lit(s) for s in stopwords])
-    hits = F.size(F.filter(toks, lambda t: F.array_contains(sw, F.lower(t))))
-    return det_round(hits / F.nullif(F.size(toks), F.lit(0)), scale)
-
-
 def quality_score(text: Column | str, scale: int = 4) -> Column:
     """Heuristic document quality in [0,1]: rewards moderate length,
     penalizes punctuation/digit noise. Deterministic, SQL-expressible.

@@ -43,62 +43,38 @@ def cosine(a: Column | str, b: Column | str) -> Column:
 
 
 def cosine_arrow():
-    """Arrow-batched cosine for HIGH-VOLUME pair scoring (returns a
-    pandas_udf(double)). The Catalyst ``cosine`` above runs three
-    interpreted array passes per row (dot + two norms) — fine for
-    oracle-sized inputs, ~10x too slow for millions of LSH candidate
-    pairs. Zero-norm pairs -> SQL NULL via pandas' nullable Float64
-    (a float NaN would NOT become NULL: Spark sorts NaN ABOVE every
-    number, so a zero vector would outrank every true neighbor and
-    pass >= threshold filters — r5 review), matching the Catalyst
-    twin's nullif guard exactly.
+    """Arrow-batched cosine for HIGH-VOLUME pair scoring that is
+    BIT-IDENTICAL to the Catalyst ``cosine`` above (returns a
+    pandas_udf(double)). The Catalyst form runs three interpreted array
+    passes per row (dot + two norms) — fine for oracle-sized inputs,
+    ~10x too slow for millions of LSH candidate pairs.
+
+    Dot and both squared norms accumulate as an EXPLICIT loop over
+    dimensions (sequential in i, vectorized over rows), so every
+    partial sum is the same IEEE add in the same order as
+    ``F.aggregate``'s left fold AND DuckDB's ``list_dot_product``; an
+    einsum/BLAS sum can differ by ~1 ulp, enough to flip an
+    integer-micro threshold at a rounding boundary. Zero-norm pairs ->
+    SQL NULL via pandas' nullable Float64 (a float NaN would NOT become
+    NULL: Spark sorts NaN ABOVE every number, so a zero vector would
+    outrank every true neighbor and pass >= threshold filters — r5
+    review), matching the Catalyst twin's nullif guard exactly.
     """
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("double")
     def cos(a: pd.Series, b: pd.Series) -> pd.Series:
-        ma = np.stack(a.to_numpy()).astype(np.float64)
-        mb = np.stack(b.to_numpy()).astype(np.float64)
-        num = np.einsum("ij,ij->i", ma, mb)
-        den = np.linalg.norm(ma, axis=1) * np.linalg.norm(mb, axis=1)
-        with np.errstate(divide="ignore", invalid="ignore"):
-            vals = num / den
-        out = pd.array(vals, dtype="Float64")
-        out[den == 0.0] = pd.NA
-        return pd.Series(out, dtype="Float64")
-
-    return cos
-
-
-def cosine_arrow_foldexact():
-    """Arrow-batched cosine that is BIT-IDENTICAL to the Catalyst
-    ``cosine`` above (returns a pandas_udf(double)).
-
-    ``cosine_arrow`` sums via einsum/BLAS — pairwise/SIMD accumulation
-    whose float64 result can differ from the sequential left fold by
-    ~1 ulp, enough to flip an integer-micro threshold at a rounding
-    boundary. This variant accumulates dot and both squared norms as
-    an EXPLICIT loop over dimensions (sequential in i, vectorized over
-    rows), so every partial sum is the same IEEE add in the same order
-    as ``F.aggregate``'s left fold AND DuckDB's ``list_dot_product`` —
-    vectorized speed with oracle-exact semantics. Use it wherever a
-    high-volume pair scoring feeds an exact-compare oracle; plain
-    ``cosine_arrow`` remains for score rankings that are persisted or
-    re-derived from Spark's own output."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("double")
-    def cos(a: pd.Series, b: pd.Series) -> pd.Series:
-        ma = np.stack(a.to_numpy()).astype(np.float64)
-        mb = np.stack(b.to_numpy()).astype(np.float64)
-        n = ma.shape[0]
+        # (dim, rows): each dimension is one contiguous row to stream
+        ma = np.stack(a.to_numpy(), axis=1).astype(np.float64)
+        mb = np.stack(b.to_numpy(), axis=1).astype(np.float64)
+        n = ma.shape[1]
         acc = np.zeros(n)
         na = np.zeros(n)
         nb = np.zeros(n)
-        for i in range(ma.shape[1]):
-            acc = acc + ma[:, i] * mb[:, i]
-            na = na + ma[:, i] * ma[:, i]
-            nb = nb + mb[:, i] * mb[:, i]
+        for x, y in zip(ma, mb):
+            acc += x * y
+            na += x * x
+            nb += y * y
         den = np.sqrt(na) * np.sqrt(nb)
         with np.errstate(divide="ignore", invalid="ignore"):
             vals = acc / den

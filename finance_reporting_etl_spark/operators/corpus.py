@@ -894,104 +894,6 @@ def feature_hash_bow(
     )
 
 
-def zipf_rank_frequency(
-    docs: DataFrame,
-    text_col: str = "text",
-    top_n: int = 100,
-) -> DataFrame:
-    """Zipf's-law fit over the corpus vocabulary: OLS of ln(frequency)
-    on ln(rank) for the top_n terms — the rank-frequency slope (~ -1
-    for natural language) that data-quality dashboards track to catch
-    template/boilerplate corpora (flat head) or tokenizer damage.
-
-    Token counts are exact; the head is a TakeOrdered over (freq DESC,
-    token ASC) — a total order, so the top_n cut is deterministic on
-    any engine; the regression is closed-form over top_n doubles and
-    the three fit statistics are rounded after one expression each.
-    """
-    from pyspark.sql import Window
-
-    from finance_reporting_etl_spark.functions.text import whitespace_tokens
-
-    counts = (
-        docs.select(
-            F.explode(whitespace_tokens(F.lower(F.col(text_col)))).alias("tok")
-        )
-        .groupBy("tok")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("freq"))
-    )
-    top = counts.orderBy(F.col("freq").desc(), F.col("tok").asc()).limit(top_n)
-    w = Window.orderBy(F.col("freq").desc(), F.col("tok").asc())
-    xy = top.select(
-        F.log(F.row_number().over(w).cast("double")).alias("x"),
-        F.log(F.col("freq").cast("double")).alias("y"),
-    )
-    a = xy.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_terms"),
-        F.sum("x").alias("sx"),
-        F.sum("y").alias("sy"),
-        F.sum(F.col("x") * F.col("y")).alias("sxy"),
-        F.sum(F.col("x") * F.col("x")).alias("sxx"),
-        F.sum(F.col("y") * F.col("y")).alias("syy"),
-    )
-    num = F.col("n_terms") * F.col("sxy") - F.col("sx") * F.col("sy")
-    dxx = F.col("n_terms") * F.col("sxx") - F.col("sx") * F.col("sx")
-    dyy = F.col("n_terms") * F.col("syy") - F.col("sy") * F.col("sy")
-    slope = num / dxx
-    return a.select(
-        "n_terms",
-        det_round(slope, 6).alias("zipf_slope"),
-        det_round(
-            (F.col("sy") - slope * F.col("sx")) / F.col("n_terms"), 6
-        ).alias("intercept"),
-        det_round(num * num / (dxx * dyy), 6).alias("r2"),
-    )
-
-
-def weighted_systematic_sample(
-    docs: DataFrame,
-    id_col: str,
-    weight_col: str,
-    k: int,
-) -> DataFrame:
-    """Deterministic weighted (importance) sampling: systematic
-    selection of exactly k picks proportional to an exact-integer
-    weight — the quality-weighted corpus subsample, reproducible on
-    any engine and any partitioning (no rand()).
-
-    A document is picked once per integer multiple of total/k that its
-    cumulative-weight interval (cum-w, cum] covers:
-    n_picks = (cum*k) div T - ((cum-w)*k) div T, all BIGINT division
-    (never float — floor(double) drifts past 2^53). The global running
-    total comes from operators.ranking.distributed_cumsum — bucketed
-    prefix sums, NO single-partition window. Σ n_picks == k exactly;
-    zero-weight rows are never picked; a weight above total/k is
-    picked multiple times (emitted once, n_picks > 1).
-    """
-    from finance_reporting_etl_spark.operators.ranking import distributed_cumsum
-
-    c = distributed_cumsum(
-        docs.select(id_col, weight_col), weight_col, id_col, [], out_col="cum"
-    )
-    tot = c.agg(F.max("cum").cast("bigint").alias("t"))
-    picks = (
-        c.crossJoin(F.broadcast(tot))
-        .select(
-            id_col,
-            F.col(weight_col),
-            F.col("cum").cast("bigint").alias("cum"),
-            (
-                F.expr(f"cum * {k} div t")
-                - F.expr(f"(cum - {weight_col}) * {k} div t")
-            )
-            .cast("bigint")
-            .alias("n_picks"),
-        )
-        .filter(F.col("n_picks") > 0)
-    )
-    return picks
-
-
 def heaps_law_growth(
     docs: DataFrame,
     id_col: str = "doc_id",

@@ -153,48 +153,6 @@ def band_hashes(num_hashes: int, bands: int) -> list[F.Column]:
     ]
 
 
-def minhash_candidate_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_hashes: int = 32,
-    bands: int = 8,
-    shingle_n: int = 3,
-) -> DataFrame:
-    """LSH banding: docs sharing any band of the minhash signature.
-
-    rows(bands) x rows-per-band(num_hashes/bands) banding; each band
-    hashes to a bucket key, buckets self-join. The shuffle key is
-    (band_idx, band_hash): uniformly distributed, so no skew; the
-    self-join per bucket is quadratic only in bucket size, which LSH
-    keeps tiny. Returns distinct (id_a < id_b) candidate pairs.
-    """
-    sig = minhash_signatures(df, id_col, text_col, num_hashes, shingle_n)
-    banded = sig.select(
-        "id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(b).alias("band_idx"), bh.alias("band_hash"))
-                    for b, bh in enumerate(band_hashes(num_hashes, bands))
-                ]
-            )
-        ).alias("band"),
-    ).select("id", "band.band_idx", "band.band_hash")
-    left = banded.alias("a")
-    right = banded.alias("b")
-    return (
-        left.join(
-            right,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
-    )
-
-
 def jaccard_prep(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -442,8 +400,8 @@ def minhash_near_dup_pairs(
     step needs no extra joins back to the documents table (1 shuffle
     join vs 3). Trade-off: the banding shuffle carries the shingle
     arrays (bands x wider rows); if shuffle bandwidth ever dominates,
-    minhash_candidate_pairs + a rejoin is the narrow-row alternative —
-    measured equal at bench scale.
+    banding bare ids and rejoining the shingle sets after the pair
+    dedup is the narrow-row alternative — measured equal at bench scale.
     """
     banded = minhash_banded_sigs(df, id_col, text_col, num_hashes, bands, shingle_n)
     return minhash_pairs_from_banded(banded, threshold)
@@ -657,11 +615,12 @@ def near_dup_clusters(
     pulls a label's label), so the jump self-join always matches and the
     fixpoint label is the component min.
     """
-    # persist, not eager localCheckpoint: edge generation still runs
-    # exactly once (the size probe materializes the cache), the blocks
-    # stay AQE-planned, no extra materialization job is paid, and they
-    # are released deterministically below instead of accumulating
-    # across a bench session (VERDICT r14 task 2)
+    # persist, not eager localCheckpoint: the blocks stay AQE-planned,
+    # no extra materialization job is paid, and they are released
+    # deterministically below instead of accumulating across a bench
+    # session (VERDICT r14 task 2). The size probe below collects at
+    # most small_graph_edges + 1 rows through a limit and does not
+    # materialize the cache.
     ed = edges.select("id_a", "id_b").persist()
     # ONE job doubles as size gate and data fetch: collect at most
     # bound+1 rows via the Arrow path; fewer than that means the small
@@ -873,35 +832,6 @@ def embedding_cosine_pairs(
         .filter(F.col("score") >= threshold)
         .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"), "score")
     )
-
-
-def lsh_cosine_pairs(
-    embeddings: DataFrame,
-    threshold: float = 0.4,
-    n_planes: int = 4,
-    n_tables: int = 8,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
-    scale: int = 6,
-) -> DataFrame:
-    """Scale path: hyperplane-LSH candidate pairs -> exact cosine verify.
-
-    Shape (measured): the bucket self-join and pair dedup run on NARROW
-    (id, tbl, bucket) rows — with 2^n_planes buckets per table the raw
-    candidate multiset is large, and carrying the vectors through it
-    shuffles |cands| x 2 x dim floats (measured 2x slower end-to-end).
-    Vectors are joined back onto the DEDUPED pairs only (small side ->
-    AQE broadcasts it; at scale both joins are shuffle joins on uniform
-    id keys), then scored with the Arrow-batched cosine.
-    """
-    from finance_reporting_etl_spark.operators.similarity import hyperplane_buckets
-
-    buckets = hyperplane_buckets(
-        spread(embeddings), n_planes, n_tables, dim, id_col, vec_col, seed
-    )
-    return lsh_cosine_pairs_from_buckets(buckets, embeddings, threshold, id_col, vec_col, scale)
 
 
 def lsh_cosine_pairs_from_buckets(
@@ -1526,9 +1456,9 @@ def incremental_clusters(
     one map over existing labels), never to the standing corpus.
 
     Inputs: ``base_clusters`` (id, cluster_id) — the persisted state;
-    ``delta_edges`` (id_a, id_b) with id_a a delta id and id_b either
-    side; ``delta_nodes`` (id). Output: (id, cluster_id) covering
-    base ∪ delta."""
+    ``delta_edges`` (id_a, id_b) — undirected delta-incident edges,
+    either endpoint may be a base id or a delta id; ``delta_nodes``
+    (id). Output: (id, cluster_id) covering base ∪ delta."""
     lab = base_clusters.select("id", "cluster_id")
     lmap_a = lab.select(
         F.col("id").alias("id_a"), F.col("cluster_id").alias("la")

@@ -19,6 +19,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegralType
 from finance_reporting_etl_spark.functions.scalars import det_round
 
 
@@ -187,18 +188,6 @@ def train_depth2_tree(
                 )
             )
     return spark.createDataFrame(rows, schema)
-
-
-def best_stump_full(xy: DataFrame):
-    """Like :func:`best_stump_row` but keeps the leaf class counts
-    (posl/posr) so each leaf's MAJORITY CLASS is known — what an
-    actual classifier needs to predict. Returns the best row of
-    (feature, thr, nl, posl, nr, posr, gini_gain), or None."""
-    scored = _scored_candidates(xy, ["feature"]).select(
-        "feature", "thr", "nl", "posl", "nr", "posr", "gini_gain"
-    )
-    rows = scored.orderBy(F.desc("gini_gain"), "feature", "thr").limit(1).collect()
-    return rows[0] if rows else None
 
 
 def best_stumps_by_fold(xyf: DataFrame) -> list:
@@ -425,8 +414,8 @@ def depth2_tree_oracle_sql() -> str:
 
 
 def stump_full_oracle_sql(src: str) -> str:
-    """DuckDB stump candidates KEEPING leaf class counts (the SQL twin
-    of operators.ml.best_stump_full before its argmax)."""
+    """DuckDB stump candidates KEEPING leaf class counts, before the
+    argmax that picks the best split."""
     return f"""
     SELECT feature, thr, nl, posl, nr, posr,
            (CASE WHEN isnan(CAST(((1.0 - (CAST(pos AS DOUBLE) / n) * (CAST(pos AS DOUBLE) / n)
@@ -624,128 +613,6 @@ def negative_sampling(
             F.col("rank").cast("long").alias("rank"),
             "item",
         )
-    )
-
-
-def naive_bayes_lang_eval(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    label_col: str = "lang",
-    text_col: str = "text",
-    train_buckets: int = 192,
-    salt: str = "nb",
-) -> DataFrame:
-    """Multinomial Naive Bayes language classifier, trained and
-    evaluated in one Catalyst plan: md5-bucket 75/25 split, Laplace
-    (+1) smoothed per-(label, token) counts, log-posterior argmax on
-    the held-out docs, per-label accuracy out.
-
-    Everything is counting: token/label counts, vocabulary size,
-    priors — all exact integers — and each log term is the log of an
-    exact integer ratio, so both engines sum identical doubles (the
-    per-(doc, label) score is rounded to 6 before the argmax; ties
-    break on label ASC). The candidate fan-out joins each test token
-    against a BROADCAST (#labels x stats) table, then left-joins the
-    (label, token) count table on its natural key — the plan any
-    engine would want at corpus scale: no all-pairs, no collect except
-    nothing (V, priors and totals stay 1-row/NL-row frames).
-
-    Empty-text test docs still classify (prior-only argmax): the score
-    spine is test-docs x labels, with the token contribution
-    coalesced to 0.
-    """
-    from pyspark.sql import Window
-
-    from finance_reporting_etl_spark.functions.text import whitespace_tokens
-    from finance_reporting_etl_spark.operators.corpus import md5_bucket
-
-    d = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.col(label_col).alias("true_label"),
-        F.col(text_col).alias("text"),
-        (md5_bucket(id_col, salt=salt) < train_buckets).alias("is_train"),
-    )
-    toks = d.select(
-        "doc_id",
-        "true_label",
-        "is_train",
-        F.explode(whitespace_tokens(F.lower(F.col("text")))).alias("token"),
-    )
-    cnt = (
-        toks.filter("is_train")
-        .groupBy(F.col("true_label").alias("cand"), "token")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
-    )
-    tot = cnt.groupBy("cand").agg(F.sum("c").cast("bigint").alias("tot_l"))
-    vv = cnt.agg(F.countDistinct("token").cast("bigint").alias("v"))
-    ntr = d.filter("is_train").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_train")
-    )
-    pri = (
-        d.filter("is_train")
-        .groupBy(F.col("true_label").alias("cand"))
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_docs"))
-    )
-    labels = (
-        pri.join(tot, "cand")
-        .crossJoin(F.broadcast(vv))
-        .crossJoin(F.broadcast(ntr))
-    )
-
-    te_tok = (
-        toks.filter(~F.col("is_train"))
-        .groupBy("doc_id", "token")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("c_dw"))
-    )
-    tok_part = (
-        te_tok.crossJoin(F.broadcast(labels))
-        .join(cnt, ["cand", "token"], "left")
-        .groupBy("doc_id", "cand")
-        .agg(
-            F.sum(
-                F.col("c_dw")
-                * F.log(
-                    (F.coalesce(F.col("c"), F.lit(0)) + F.lit(1)).cast(
-                        "double"
-                    )
-                    / (F.col("tot_l") + F.col("v"))
-                )
-            ).alias("tp")
-        )
-    )
-    spine = (
-        d.filter(~F.col("is_train"))
-        .select("doc_id", "true_label")
-        .crossJoin(F.broadcast(labels))
-    )
-    scores = spine.join(tok_part, ["doc_id", "cand"], "left").select(
-        "doc_id",
-        "true_label",
-        "cand",
-        det_round(
-            F.coalesce(F.col("tp"), F.lit(0.0))
-            + F.log(F.col("n_docs").cast("double") / F.col("n_train")),
-            6,
-        ).alias("score"),
-    )
-    w = Window.partitionBy("doc_id").orderBy(
-        F.col("score").desc(), F.col("cand").asc()
-    )
-    pred = scores.withColumn("rn", F.row_number().over(w)).filter(
-        F.col("rn") == 1
-    )
-    return pred.groupBy(F.col("true_label").alias("lang")).agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_test"),
-        F.sum((F.col("cand") == F.col("true_label")).cast("int"))
-        .cast("bigint")
-        .alias("n_correct"),
-        det_round(
-            F.sum((F.col("cand") == F.col("true_label")).cast("int")).cast(
-                "double"
-            )
-            / F.count(F.lit(1)),
-            6,
-        ).alias("accuracy"),
     )
 
 
@@ -1092,65 +959,12 @@ def granger_oracle_sql(src_sql: str) -> str:
 _GB_GAIN = "(sl_d*sl_d/nl_d + sr_d*sr_d/nr_d - s_d*s_d/n_d)"
 
 
-def reg_stump_candidates(melted: DataFrame) -> DataFrame:
-    """All regression-stump split candidates for a melted
-    (feature, v, y) frame with INTEGER y: one row per (feature, thr)
-    with exact leaf counts/sums, floor-div leaf predictions (pmod
-    identity — round-2 residuals go negative) and the closed-form SSE
-    gain. The count/prefix-sum pass mirrors _scored_candidates; the
-    value domain per feature bounds the ordering windows."""
-    g = melted.groupBy("feature", "v").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_v"),
-        F.sum("y").cast("bigint").alias("s_v"),
-    )
-    wc = (
-        Window.partitionBy("feature")
-        .orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    wf = Window.partitionBy("feature")
-    c = g.select(
-        "feature",
-        "v",
-        F.sum("n_v").over(wc).cast("bigint").alias("nl"),
-        F.sum("s_v").over(wc).cast("bigint").alias("sl"),
-        F.sum("n_v").over(wf).cast("bigint").alias("n"),
-        F.sum("s_v").over(wf).cast("bigint").alias("s"),
-    ).filter(F.col("nl") < F.col("n"))
-    c = c.select(
-        "feature",
-        F.col("v").alias("thr"),
-        "nl",
-        "sl",
-        (F.col("n") - F.col("nl")).alias("nr"),
-        (F.col("s") - F.col("sl")).alias("sr"),
-        "n",
-        "s",
-    )
-    c = (
-        c.withColumn("nl_d", F.col("nl").cast("double"))
-        .withColumn("sl_d", F.col("sl").cast("double"))
-        .withColumn("nr_d", F.col("nr").cast("double"))
-        .withColumn("sr_d", F.col("sr").cast("double"))
-        .withColumn("n_d", F.col("n").cast("double"))
-        .withColumn("s_d", F.col("s").cast("double"))
-    )
-    return c.select(
-        "feature",
-        "thr",
-        "nl",
-        "nr",
-        F.expr("(sl - pmod(sl, nl)) div nl").cast("bigint").alias("pred_l"),
-        F.expr("(sr - pmod(sr, nr)) div nr").cast("bigint").alias("pred_r"),
-        F.expr(_GB_GAIN).alias("gain"),
-    )
-
-
 def reg_stump_candidates_sql(src: str) -> str:
-    """DuckDB twin of :func:`reg_stump_candidates` over melted CTE
-    ``src`` (feature, v, y). Floor division spells the pmod identity
-    (DuckDB ``//`` truncates toward zero like Spark ``div``); the gain
-    text is the shared ``_GB_GAIN`` template."""
+    """DuckDB twin of the regression-stump candidate scan in
+    :func:`boosted_reg_stumps`, over melted CTE ``src`` (feature, v,
+    y). Floor division spells the pmod identity (DuckDB ``//``
+    truncates toward zero like Spark ``div``); the gain text is the
+    shared ``_GB_GAIN`` template."""
     return f"""
     SELECT feature, thr, nl, nr,
            CAST((sl - (((sl % nl) + nl) % nl)) // nl AS BIGINT) AS pred_l,
@@ -1197,7 +1011,18 @@ def boosted_reg_stumps(
     (round, feature, thr, pred_l, pred_r, sse_after DECIMAL) — the
     1-row-per-round collect is model parameters (the house bound),
     not data. Tie-break (gain desc, feature, thr) is deterministic
-    because gain is a closed form over exact integer moments."""
+    because gain is a closed form over exact integer moments.
+
+    ``y_col`` and every feature column must be integral; any other type
+    raises ``ValueError`` naming the column (a cast would silently
+    truncate fractions and shift thresholds)."""
+    fields = {f.name: f.dataType for f in base.schema.fields}
+    for c in [y_col, *feature_cols]:
+        if not isinstance(fields.get(c), IntegralType):
+            raise ValueError(
+                f"boosted_reg_stumps: column {c!r} must be an integral "
+                f"type, got {fields.get(c)}"
+            )
     # ONE scan for ALL rounds (guide §1.2): the base collapses to one
     # moment row per distinct feature TUPLE (n, Σy, Σy² — the Σy² per-
     # row product stays in DECIMAL(38,0), overflow-proof for any
@@ -1212,6 +1037,7 @@ def boosted_reg_stumps(
     rows = []
     dec = "decimal(38,0)"
     two = F.lit(2).cast(dec)
+    # the bigint casts below only widen: every input is integral
     pre = (
         base.withColumn("__y", F.col(y_col).cast("bigint"))
         .groupBy(*feature_cols)

@@ -21,11 +21,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from finance_reporting_etl_spark.functions.vectors import (
-    as_double_array,
-    cosine,
-    cosine_arrow_foldexact,
-)
+from finance_reporting_etl_spark.functions.vectors import cosine, cosine_arrow
 from finance_reporting_etl_spark.functions.scalars import det_round
 from finance_reporting_etl_spark.partitioning import spread
 
@@ -86,28 +82,6 @@ def _hyperplanes(dim: int, n_planes: int, seed: int = 42) -> np.ndarray:
     """Deterministic Gaussian hyperplanes (public LSH construction)."""
     rng = np.random.RandomState(seed)
     return rng.randn(n_planes, dim).astype(np.float64)
-
-
-def signature_col(vec_col: str, planes: np.ndarray) -> F.Column:
-    """Sign-pattern bucket id: bit p = [dot(v, plane_p) >= 0].
-
-    Pure-Catalyst form (aggregate over zip_with per plane) — kept for
-    single-table use and as the no-Python reference; for many tables
-    use ``bucket_udf``, which does ALL tables in one Arrow-batched
-    numpy matmul (higher-order lambdas evaluate interpreted and cost
-    ~n_planes passes per row).
-    """
-    v = as_double_array(F.col(vec_col))
-    bucket = F.lit(0).cast("long")
-    for p, plane in enumerate(planes):
-        weights = F.array(*[F.lit(float(w)) for w in plane])
-        d = F.aggregate(
-            F.zip_with(v, weights, lambda x, wgt: x * wgt), F.lit(0.0), lambda acc, x: acc + x
-        )
-        bucket = bucket + F.when(d >= 0, F.shiftleft(F.lit(1).cast("long"), p)).otherwise(
-            F.lit(0).cast("long")
-        )
-    return bucket
 
 
 def bucket_udf(all_planes: np.ndarray):
@@ -184,7 +158,8 @@ def topk_from_buckets(
     )
     # vectors join back onto the DEDUPED pairs only (measured 2x end-to-end
     # vs carrying vectors through the dedup — same shape as
-    # operators/dedup.py lsh_cosine_pairs); Arrow-batched cosine scoring.
+    # operators/dedup.py lsh_cosine_pairs_from_buckets); Arrow-batched
+    # cosine scoring.
     vecs = embeddings.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
     qv = vecs.filter(F.col("id").isin(query_ids)).withColumnsRenamed(
         {"id": "query_id", "v": "q_vec"}
@@ -413,12 +388,12 @@ def ivf_topk_from_index(
     one cell, so no pair dedup is needed) -> vector re-join -> exact
     cosine -> deterministic per-query rank window.
 
-    ``arrow=True`` scores with ``cosine_arrow_foldexact`` — the
-    BIT-IDENTICAL vectorized twin of the Catalyst fold (same IEEE op
-    order per dimension, see vectors.py), so scores and ranks cannot
-    move. Worth it from ~30k candidate pairs up (the 64-query eval
-    serves); below that the Arrow stage's round-trip costs more than
-    the interpreted fold (measured both ways at sf0.1)."""
+    ``arrow=True`` scores with ``cosine_arrow`` — the BIT-IDENTICAL
+    vectorized twin of the Catalyst fold (same IEEE op order per
+    dimension, see vectors.py), so scores and ranks cannot move. Worth
+    it from ~30k candidate pairs up (the 64-query eval serves); below
+    that the Arrow stage's round-trip costs more than the interpreted
+    fold (measured both ways at sf0.1)."""
     cands = (
         index.withColumnRenamed("id", "neighbor_id")
         .join(F.broadcast(probes), "cell")
@@ -431,7 +406,7 @@ def ivf_topk_from_index(
     )
     cv = vecs.withColumnsRenamed({"id": "neighbor_id", "v": "c_vec"})
     score_fn = (
-        (lambda a, b: cosine_arrow_foldexact()(F.col(a), F.col(b)))
+        (lambda a, b: cosine_arrow()(F.col(a), F.col(b)))
         if arrow
         else (lambda a, b: cosine(a, b))
     )

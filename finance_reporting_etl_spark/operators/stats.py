@@ -780,172 +780,6 @@ def kendall_tau_b(
     )
 
 
-def oneway_anova_from_cents(
-    df: DataFrame, group_col: str, cents_col: str
-) -> DataFrame:
-    """One-way ANOVA F over integer-cent values: does the group mean
-    differ across levels of ``group_col``? (The k-group generalization
-    of welch_t_from_cents, classic pooled-variance form.)
-
-    Per-group (n, sum, sumsq) are exact BIGINTs (map-side combine; one
-    shuffle on ~k rows), the k-row reduction to SS_between/SS_within is
-    float on exact inputs, so both engines see identical operands and
-    the only divergence is k-term summation order (k is tiny). Callers
-    must keep cents small enough that cents^2 sums fit BIGINT (the
-    welch precondition; use decimal(38,0) upstream otherwise). Emits
-    ONE row: k_groups, n, ss_between, ss_within, f_stat, eta_squared —
-    NULL F when every row is one group (k=1) or groups are singletons
-    (n=k), via nullif (the mann_whitney ADVICE pattern).
-    """
-    c = F.col(cents_col)
-    g = df.groupBy(group_col).agg(
-        F.count(F.lit(1)).cast("bigint").alias("__n"),
-        F.sum(c).cast("bigint").alias("__s"),
-        F.sum(c * c).cast("bigint").alias("__q"),
-    )
-    a = g.agg(
-        F.count(F.lit(1)).cast("bigint").alias("k_groups"),
-        F.sum("__n").cast("bigint").alias("n"),
-        F.sum("__s").cast("bigint").alias("__S"),
-        F.sum("__q").cast("bigint").alias("__Q"),
-        F.sum(
-            F.col("__s").cast("double")
-            * F.col("__s").cast("double")
-            / F.col("__n").cast("double")
-        ).alias("__sb"),
-    )
-    grand = F.col("__S").cast("double") * F.col("__S").cast("double") / F.col(
-        "n"
-    ).cast("double")
-    ssb = F.col("__sb") - grand
-    ssw = F.col("__Q").cast("double") - F.col("__sb")
-    sst = F.col("__Q").cast("double") - grand
-    f_stat = (
-        ssb
-        / F.nullif((F.col("k_groups") - F.lit(1)).cast("double"), F.lit(0.0))
-    ) / F.nullif(
-        ssw / F.nullif((F.col("n") - F.col("k_groups")).cast("double"), F.lit(0.0)),
-        F.lit(0.0),
-    )
-    return a.select(
-        "k_groups",
-        "n",
-        det_round(ssb / 10000.0, 2).alias("ss_between_dollars"),
-        det_round(ssw / 10000.0, 2).alias("ss_within_dollars"),
-        det_round(f_stat, 6).alias("f_stat"),
-        det_round(ssb / F.nullif(sst, F.lit(0.0)), 6).alias("eta_squared"),
-    )
-
-
-def jarque_bera_from_cents(
-    series: DataFrame, cents_col: str
-) -> DataFrame:
-    """Jarque-Bera normality test on a BOUNDED series of integer cents
-    (a daily aggregate: calendar-sized, never data-sized).
-
-    Two passes so the float work is well-conditioned: pass 1 takes the
-    EXACT integer (sum, count) — both engines derive the identical
-    double mean from identical ints — pass 2 sums centered powers
-    (x - mean)^k as doubles, which are O(sigma^k) not O(mean^k), so
-    k-th-power magnitudes stay small and summation-order noise is far
-    below the 6-decimal rounding. skew = m3/m2^1.5, excess kurtosis
-    = m4/m2^2 - 3, JB = n/6 * (skew^2 + excess^2/4); 5% critical value
-    chi2(2) = 5.991465.
-    """
-    m = series.agg(
-        F.count(F.lit(1)).cast("bigint").alias("__n"),
-        F.sum(cents_col).cast("bigint").alias("__s"),
-    )
-    j = series.crossJoin(F.broadcast(m))
-    d = F.col(cents_col).cast("double") - F.col("__s").cast("double") / F.col(
-        "__n"
-    ).cast("double")
-    a = j.groupBy("__n").agg(
-        F.sum(d * d).alias("__p2"),
-        F.sum(d * d * d).alias("__p3"),
-        F.sum(d * d * d * d).alias("__p4"),
-    )
-    n_d = F.col("__n").cast("double")
-    m2 = F.col("__p2") / n_d
-    m3 = F.col("__p3") / n_d
-    m4 = F.col("__p4") / n_d
-    skew = m3 / F.nullif(F.pow(m2, F.lit(1.5)), F.lit(0.0))
-    excess = m4 / F.nullif(m2 * m2, F.lit(0.0)) - F.lit(3.0)
-    jb = n_d / F.lit(6.0) * (skew * skew + excess * excess / F.lit(4.0))
-    return a.select(
-        F.col("__n").alias("n"),
-        det_round(skew, 6).alias("skewness"),
-        det_round(excess, 6).alias("excess_kurtosis"),
-        det_round(jb, 6).alias("jb_stat"),
-        (jb > F.lit(5.991465)).cast("int").alias("nonnormal_95"),
-    )
-
-
-def mann_kendall_trend(
-    series: DataFrame, order_col: str, value_col: str
-) -> DataFrame:
-    """Mann-Kendall trend test on a BOUNDED series — the significance
-    complement to theil_sen_trend's slope estimate (same pair set, so
-    the same broadcast o1 < o2 pair join; input must be calendar-sized).
-
-    S = sum of sign(x2 - x1) over ordered pairs is an exact integer;
-    the tie-corrected variance uses per-value tie-group counts t:
-    var = (n(n-1)(2n+5) - sum t(t-1)(2t+5)) / 18 — exact integers until
-    ONE division. z applies the standard continuity correction
-    (S -> S -+ 1); all floats are single expressions on exact ints.
-    """
-    a = series.select(
-        F.col(order_col).alias("o1"), F.col(value_col).alias("x1")
-    )
-    b = series.select(
-        F.col(order_col).alias("o2"), F.col(value_col).alias("x2")
-    )
-    pairs = a.join(F.broadcast(b), F.col("o1") < F.col("o2"))
-    s_agg = pairs.agg(
-        F.sum(F.signum(F.col("x2") - F.col("x1")))
-        .cast("bigint")
-        .alias("s_stat")
-    )
-    ties = (
-        series.groupBy(value_col)
-        .agg(F.count(F.lit(1)).cast("bigint").alias("__t"))
-        .agg(
-            F.sum("__t").cast("bigint").alias("__n"),
-            F.sum(
-                F.col("__t")
-                * (F.col("__t") - F.lit(1))
-                * (F.lit(2) * F.col("__t") + F.lit(5))
-            )
-            .cast("bigint")
-            .alias("__tie_term"),
-        )
-    )
-    j = s_agg.crossJoin(F.broadcast(ties))
-    n = F.col("__n")
-    var_s = (
-        n * (n - F.lit(1)) * (F.lit(2) * n + F.lit(5)) - F.col("__tie_term")
-    ).cast("double") / F.lit(18.0)
-    z = F.when(
-        F.col("s_stat") > 0,
-        (F.col("s_stat") - F.lit(1)).cast("double")
-        / F.nullif(F.sqrt(var_s), F.lit(0.0)),
-    ).when(
-        F.col("s_stat") < 0,
-        (F.col("s_stat") + F.lit(1)).cast("double")
-        / F.nullif(F.sqrt(var_s), F.lit(0.0)),
-    ).otherwise(F.lit(0.0))
-    return j.select(
-        n.alias("n"),
-        "s_stat",
-        det_round(var_s, 6).alias("var_s"),
-        det_round(z, 6).alias("z_stat"),
-        F.when(z > F.lit(1.959964), F.lit("increasing"))
-        .when(z < F.lit(-1.959964), F.lit("decreasing"))
-        .otherwise(F.lit("no_trend"))
-        .alias("trend"),
-    )
-
-
 def average_precision_exact(
     scored: DataFrame, score_col: str = "score", label_col: str = "y"
 ) -> DataFrame:

@@ -25,11 +25,9 @@ so every downstream decision is re-derived from bit-identical inputs.
 # per-process value at import, so Spark and DuckDB always read one
 # run's aux tables. Unset (the default), the path is stable across
 # processes.
-import os as _os  # noqa: E402
+from finance_reporting_etl_spark.runs import aux_dir as _aux_dir  # noqa: E402
 
-_AUX_DIR = "/root/repo/spark-warehouse/oracle_aux" + (
-    f"/{_os.environ['SPARK_GRAFT_RUN_ID']}" if _os.environ.get("SPARK_GRAFT_RUN_ID") else ""
-)
+_AUX_DIR = _aux_dir()
 
 from finance_reporting_etl_spark.functions.scalars import (  # noqa: E402
     det_round_sql as _dr_top,

@@ -5603,21 +5603,18 @@ def q_bucketed_join_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     side (tests/test_operators.py::test_bucketed_join_is_shuffle_free
     pins the plan property; this query gates the RESULT against the
     plain-join oracle). This is the pay-once-shuffle layout for fact
-    tables re-joined daily at 100 TB. Table names carry the run id so
-    concurrent drivers do not collide in the shared warehouse; a fixed
-    run id overwrites its own tables in place (bounded), ephemeral ids
-    are removed by their harness (tests/conftest.py cleans this
-    pytest run's bkt_* tables — r5 review)."""
-    import os as _os
-
+    tables re-joined daily at 100 TB. Table names carry the run id
+    (runs.run_table) so concurrent drivers do not collide in the shared
+    warehouse."""
     from finance_reporting_etl_spark.operators.scale import (
         bucketed_join,
         write_bucketed,
     )
+    from finance_reporting_etl_spark.runs import run_table
 
-    run = (_os.environ.get("SPARK_GRAFT_RUN_ID") or "main").replace("-", "_")
     sf_tag = sf_dir.strip("/").replace("/", "_").replace(".", "_").replace("-", "_")
-    t_o, t_l = f"bkt_o_{sf_tag}_{run}", f"bkt_l_{sf_tag}_{run}"
+    t_o = run_table(spark, f"bkt_o_{sf_tag}")
+    t_l = run_table(spark, f"bkt_l_{sf_tag}")
     write_bucketed(
         _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority"),
         t_o, ["o_orderkey"], n_buckets=8,
@@ -11835,9 +11832,8 @@ def _lsh_candidate_scores(
     pipeline in SQL from the persisted bucket table. Arrow-batched
     cosine because the Catalyst form runs three interpreted array
     passes per row — ~10x too slow for the millions of LSH candidate
-    pairs here (functions/vectors.py:46); det_round(6) absorbs the
-    sub-ulp numpy-vs-oracle summation difference, the standing
-    convention of every LSH/IVF scorer in this repo."""
+    pairs here; its sequential fold is bit-identical to the oracle's
+    ``list_dot_product`` (functions/vectors.py)."""
     from finance_reporting_etl_spark.functions.vectors import cosine_arrow
     from finance_reporting_etl_spark.operators.similarity import (
         hyperplane_buckets,
@@ -11851,8 +11847,8 @@ def _lsh_candidate_scores(
     )
     b2 = buckets.withColumnsRenamed({"id": "dst"})
     # The bucket self-join's candidate set is a symmetric closure and
-    # cosine is symmetric (numpy dot/norms hit identical IEEE ops in
-    # either argument order), so score each unordered pair ONCE
+    # cosine is symmetric (the fold hits identical IEEE ops in either
+    # argument order), so score each unordered pair ONCE
     # (src < dst) and mirror: halves the distinct shuffle, the two
     # vector joins, and the Arrow pair traffic. localCheckpoint
     # materializes the half before the union so the mirror branch
@@ -13793,51 +13789,16 @@ def q_knn_hubness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """WHO answers every query: in high dimensions a few hub vectors
     invade everyone's top-k while antihubs vanish from all lists —
     recall metrics look fine while results collapse onto hubs. The
-    in-degree histogram over the LSH-candidate top-10 graph (same
-    candidate derivation as knn_graph_reciprocity, own persisted
-    bucket table) makes the pathology measurable: bucket equi-joins,
-    Arrow-batched cosine, det_round(6)+id ranking, and an exact
-    integer histogram including the zero-degree antihubs."""
+    in-degree histogram over the LSH-candidate top-10 graph (the
+    _lsh_candidate_scores pipeline shared with knn_graph_reciprocity,
+    over its own persisted bucket table) makes the pathology
+    measurable: bucket equi-joins, Arrow-batched cosine, det_round(6)+id
+    ranking, and an exact integer histogram including the zero-degree
+    antihubs."""
     from pyspark.sql import Window
 
-    from finance_reporting_etl_spark.functions.vectors import cosine_arrow
-    from finance_reporting_etl_spark.operators.similarity import (
-        hyperplane_buckets,
-    )
-
     emb = _t(spark, sf_dir, "embeddings")
-    buckets = _persist_aux(
-        spark, hyperplane_buckets(emb, n_planes=4, n_tables=8), "hub_buckets"
-    )
-    b2 = buckets.withColumnsRenamed({"id": "dst"})
-    # same halving as _lsh_candidate_scores: the bucket self-join's
-    # candidate set is symmetric and cosine(a,b) == cosine(b,a)
-    # bit-for-bit, so score src < dst once and mirror the scored half
-    cand = (
-        buckets.withColumnRenamed("id", "src")
-        .join(b2, ["tbl", "bucket"])
-        .filter(F.col("src") < F.col("dst"))
-        .select("src", "dst")
-        .distinct()
-    )
-    vecs = emb.select(
-        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v")
-    )
-    sv = vecs.withColumnsRenamed({"vec_id": "src", "v": "sv"})
-    dv = vecs.withColumnsRenamed({"vec_id": "dst", "v": "dv"})
-    cos = cosine_arrow()
-    half = (
-        cand.join(sv, "src")
-        .join(dv, "dst")
-        .withColumn("score", det_round(cos(F.col("sv"), F.col("dv")), 6))
-        .select("src", "dst", "score")
-        .localCheckpoint(eager=True)
-    )
-    scored = half.unionByName(
-        half.select(
-            F.col("dst").alias("src"), F.col("src").alias("dst"), "score"
-        )
-    )
+    scored = _lsh_candidate_scores(spark, sf_dir, "hub_buckets")
     w = Window.partitionBy("src").orderBy(F.col("score").desc(), F.col("dst").asc())
     tk = (
         scored.withColumn("rank", F.row_number().over(w))
@@ -15382,16 +15343,14 @@ def q_semantic_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidates, scores, and counts from those bit-identical inputs.
     Output: one exact-integer row per threshold in the 0.30/0.35/0.40
     sweep."""
-    from finance_reporting_etl_spark.functions.vectors import (
-        cosine_arrow_foldexact,
-    )
+    from finance_reporting_etl_spark.functions.vectors import cosine_arrow
     from finance_reporting_etl_spark.operators.corpus import md5_bucket
     from finance_reporting_etl_spark.operators.similarity import (
         ivf_index,
         ivf_probes_for,
     )
 
-    _cos_fx = cosine_arrow_foldexact()
+    _cos_fx = cosine_arrow()
     emb = _t(spark, sf_dir, "embeddings")
     b = md5_bucket("vec_id", salt="semdecon")
     ev = emb.filter(b < 13)
@@ -15588,9 +15547,7 @@ def q_decontamination_method_agreement(spark: SparkSession, sf_dir: str) -> Data
     leg broadcasts the tiny benchmark gram set; the semantic leg is
     cell-blocked through the persisted train-side index the oracle
     re-reads."""
-    from finance_reporting_etl_spark.functions.vectors import (
-        cosine_arrow_foldexact,
-    )
+    from finance_reporting_etl_spark.functions.vectors import cosine_arrow
     from finance_reporting_etl_spark.operators.corpus import (
         md5_bucket,
         ngram_decontaminate,
@@ -15606,7 +15563,7 @@ def q_decontamination_method_agreement(spark: SparkSession, sf_dir: str) -> Data
         docs.filter(bd >= 13), docs.filter(bd < 13), n=4
     ).select(F.col("doc_id").alias("id"), F.lit(1).alias("f_ng"))
 
-    _cos_fx = cosine_arrow_foldexact()
+    _cos_fx = cosine_arrow()
     emb = _t(spark, sf_dir, "embeddings")
     bv = md5_bucket("vec_id", salt="decon")
     index = _persist_aux(spark, ivf_index(emb.filter(bv >= 13)), "deconagree_index")
@@ -15772,16 +15729,14 @@ def q_semantic_decontamination_recall(spark: SparkSession, sf_dir: str) -> DataF
     sweep points are conditional sums over that one scored frame
     (first bench sample of the 4-independent-legs shape measured
     15.2 s; this is the redesign)."""
-    from finance_reporting_etl_spark.functions.vectors import (
-        cosine_arrow_foldexact,
-    )
+    from finance_reporting_etl_spark.functions.vectors import cosine_arrow
     from finance_reporting_etl_spark.operators.corpus import md5_bucket
     from finance_reporting_etl_spark.operators.similarity import (
         ivf_index,
         ivf_probes_ranked,
     )
 
-    _cos_fx = cosine_arrow_foldexact()
+    _cos_fx = cosine_arrow()
     emb = _t(spark, sf_dir, "embeddings")
     b = md5_bucket("vec_id", salt="semdecon")
     tr = emb.filter(b >= 13)
@@ -16006,9 +15961,7 @@ def q_crossmodal_decon_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     the universe of train ids that have embeddings, completing the
     cross-modal agreement matrix (VERDICT r12 task 8b). Low kappa =
     the modalities see DIFFERENT leakage — run both at 100 TB."""
-    from finance_reporting_etl_spark.functions.vectors import (
-        cosine_arrow_foldexact,
-    )
+    from finance_reporting_etl_spark.functions.vectors import cosine_arrow
     from finance_reporting_etl_spark.operators.corpus import md5_bucket
     from finance_reporting_etl_spark.operators.multimodal import (
         attach_synthetic_png,
@@ -16042,7 +15995,7 @@ def q_crossmodal_decon_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("f_img", F.lit(1))
     )
 
-    _cos_fx = cosine_arrow_foldexact()
+    _cos_fx = cosine_arrow()
     cand = index.withColumnRenamed("id", "train_id").join(
         F.broadcast(probes), "cell"
     ).select("query_id", "train_id")
@@ -16248,9 +16201,7 @@ def q_decon_method_agreement_3way(spark: SparkSession, sf_dir: str) -> DataFrame
     lang_id_agreement_kappa convention). Near-zero kappa = the three
     modalities flag nearly DISJOINT leakage, the measured case for
     running all three at 100 TB."""
-    from finance_reporting_etl_spark.functions.vectors import (
-        cosine_arrow_foldexact,
-    )
+    from finance_reporting_etl_spark.functions.vectors import cosine_arrow
     from finance_reporting_etl_spark.operators.corpus import (
         md5_bucket,
         ngram_decontaminate,
@@ -16281,7 +16232,7 @@ def q_decon_method_agreement_3way(spark: SparkSession, sf_dir: str) -> DataFrame
         ),
         "decon_method_agreement_3way",
     )
-    _cos_fx = cosine_arrow_foldexact()
+    _cos_fx = cosine_arrow()
     cand = index.withColumnRenamed("id", "train_id").join(
         F.broadcast(probes), "cell"
     ).select("query_id", "train_id")
@@ -16378,9 +16329,7 @@ def q_streaming_semdecon_flag_maintain(spark: SparkSession, sf_dir: str) -> Data
     flagged counts, flagged-id checksum, ppm) read from the STREAMED
     sink; the oracle re-derives it from the persisted index + probes
     at the same 0.30 threshold."""
-    from finance_reporting_etl_spark.functions.vectors import (
-        cosine_arrow_foldexact,
-    )
+    from finance_reporting_etl_spark.functions.vectors import cosine_arrow
     from finance_reporting_etl_spark.operators.corpus import md5_bucket
     from finance_reporting_etl_spark.operators.similarity import (
         ivf_index,
@@ -16391,7 +16340,7 @@ def q_streaming_semdecon_flag_maintain(spark: SparkSession, sf_dir: str) -> Data
         stage_microbatches,
     )
 
-    _cos_fx = cosine_arrow_foldexact()
+    _cos_fx = cosine_arrow()
     emb = _t(spark, sf_dir, "embeddings")
     b = md5_bucket("vec_id", salt="semdecon")
     ev = emb.filter(b < 13)
@@ -16823,9 +16772,7 @@ def q_crossmodal_purge_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
     idiom). At 100 TB the candidate spaces stay banded (shape class +
     8-chunk pigeonhole; IVF cell), flags are 1-bit columns, and
     adding a policy costs one more conditional sum, not a rescan."""
-    from finance_reporting_etl_spark.functions.vectors import (
-        cosine_arrow_foldexact,
-    )
+    from finance_reporting_etl_spark.functions.vectors import cosine_arrow
     from finance_reporting_etl_spark.operators.multimodal import (
         attach_synthetic_png,
         perceptual_hash_media,
@@ -16845,7 +16792,7 @@ def q_crossmodal_purge_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
     idx = _persist_aux(spark, ivf_index(emb), "xpurge_index")
     vecs = emb.select(F.col("vec_id").alias("id"), F.col("embedding").alias("v"))
-    _cos_fx = cosine_arrow_foldexact()
+    _cos_fx = cosine_arrow()
     a = idx.select(F.col("id").alias("id_a"), "cell")
     b = idx.select(F.col("id").alias("id_b"), "cell")
     sem = (

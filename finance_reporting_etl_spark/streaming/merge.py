@@ -22,6 +22,8 @@ the partitions present in the batch; the streaming plumbing
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
@@ -42,7 +44,9 @@ def overwrite_state_dir(df: DataFrame, path: str) -> None:
     returning false, so every return value is checked (ADVICE r14).
     The two-rename window is still not transactional — the module
     docstring scopes plain parquet state to the demo harness;
-    production uses MERGE INTO."""
+    production uses MERGE INTO. A crash between the two renames leaves
+    the state only as ``<path>__old``; ``_read_parquet_if_exists``
+    renames it back before the next batch reads the state."""
     sess = df.sparkSession
     jvm = sess._jvm
     conf = sess._jsc.hadoopConfiguration()
@@ -53,11 +57,14 @@ def overwrite_state_dir(df: DataFrame, path: str) -> None:
     hn = jvm.org.apache.hadoop.fs.Path(new_path)
     ho = jvm.org.apache.hadoop.fs.Path(old_path)
     fs = hp.getFileSystem(conf)
-    if fs.exists(ho):
-        fs.delete(ho, True)
     had_prev = fs.exists(hp)
-    if had_prev and not fs.rename(hp, ho):
-        raise IOError(f"rename {path} -> {old_path} failed")
+    if had_prev:
+        # a leftover __old is stale only while the live dir exists;
+        # without it, __old is the last committed state
+        if fs.exists(ho):
+            fs.delete(ho, True)
+        if not fs.rename(hp, ho):
+            raise IOError(f"rename {path} -> {old_path} failed")
     if not fs.rename(hn, hp):
         if had_prev and not fs.rename(ho, hp):
             raise IOError(
@@ -75,13 +82,24 @@ def _read_parquet_if_exists(sess, path: str):
     bare except around read.parquet would treat ANY transient failure
     (S3 throttle, corrupt footer, permission blip) as 'first batch'
     and let the subsequent overwrite destroy all accumulated state
-    (r5 review). Real read errors propagate."""
-    jvm = sess._jvm
-    conf = sess._jsc.hadoopConfiguration()
-    hp = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hp.getFileSystem(conf)
-    if not fs.exists(hp):
-        return None
+    (r5 review). Real read errors propagate.
+
+    When only ``<path>__old`` exists, ``overwrite_state_dir`` crashed
+    between its renames: it is renamed back, so the batch merges into
+    the last committed state instead of into nothing. One glob finds
+    both names, so a healthy read costs the same single FileSystem
+    call as a bare existence probe."""
+    Path = sess._jvm.org.apache.hadoop.fs.Path
+    hp = Path(path)
+    fs = hp.getFileSystem(sess._jsc.hadoopConfiguration())
+    # escape glob metacharacters of the path itself
+    pattern = re.sub(r"([\\{}\[\]*?])", r"\\\1", hp.toString()) + "{,__old}"
+    found = {st.getPath().getName() for st in fs.globStatus(Path(pattern)) or []}
+    if hp.getName() not in found:
+        if hp.getName() + "__old" not in found:
+            return None
+        if not fs.rename(Path(path + "__old"), hp):
+            raise IOError(f"restoring {path}__old -> {path} failed")
     return sess.read.parquet(path)
 
 

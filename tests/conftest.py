@@ -1,6 +1,5 @@
 from __future__ import annotations
 
-import os
 import sys
 from pathlib import Path
 
@@ -9,10 +8,14 @@ import pytest
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
-# Isolate this pytest run's oracle_aux tables from any concurrently
-# running gate/bench process (queries.py bakes the id at import, which
-# happens after this conftest loads).
-os.environ.setdefault("SPARK_GRAFT_RUN_ID", f"pytest-{os.getpid()}")
+# Isolate this pytest run's oracle_aux and bkt_* tables from any
+# concurrently running gate/bench process; removed at exit. Must run
+# before anything imports queries/oracles, which read the run id once.
+from finance_reporting_etl_spark.runs import start_run  # noqa: E402
+
+start_run("pytest")
+
+from tests.oracle_util import duck_views  # noqa: E402
 
 # Derandomize Hypothesis so the suite is deterministic on ANY box: the
 # r14 driver run drew a twap rounding-tie example the builder's three
@@ -24,23 +27,6 @@ from hypothesis import settings as _hyp_settings  # noqa: E402
 _hyp_settings.register_profile("deterministic", derandomize=True)
 _hyp_settings.load_profile("deterministic")
 
-
-@pytest.fixture(scope="session", autouse=True)
-def _cleanup_aux():
-    yield
-    import glob
-    import shutil
-
-    from finance_reporting_etl_spark.queries import _AUX_DIR
-
-    if "pytest-" in _AUX_DIR:
-        shutil.rmtree(_AUX_DIR, ignore_errors=True)
-    # this run's bucketed warehouse tables (bkt_*_pytest_<pid>) — the
-    # per-run name suffix that prevents cross-driver races would
-    # otherwise accumulate one orders+lineitem copy per CI run
-    run = os.environ["SPARK_GRAFT_RUN_ID"].replace("-", "_")
-    for d in glob.glob(str(REPO / "spark-warehouse" / f"bkt_*_{run}")):
-        shutil.rmtree(d, ignore_errors=True)
 
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_ORACLE = "/root/testdata/sf0.01"
@@ -59,22 +45,9 @@ def sf_dir() -> str:
     return SF_SMOKE
 
 
-def _duck_con(sf_dir: str):
-    import duckdb
-
-    con = duckdb.connect()
-    for name in (
-        "region nation customer supplier part orders lineitem events documents embeddings".split()
-    ):
-        con.execute(
-            f"CREATE VIEW {name} AS SELECT * FROM '{sf_dir}/{name}.parquet'"
-        )
-    return con
-
-
 @pytest.fixture(scope="session")
 def duck():
-    con = _duck_con(SF_SMOKE)
+    con = duck_views(SF_SMOKE)
     yield con
     con.close()
 
@@ -84,6 +57,6 @@ def duck_oracle():
     """DuckDB views over SF_ORACLE (sf0.01) — the driver's gate scale.
     Used by the gate-window exact-compare test; the three r7 driver
     hash failures were invisible at sf0.001."""
-    con = _duck_con(SF_ORACLE)
+    con = duck_views(SF_ORACLE)
     yield con
     con.close()

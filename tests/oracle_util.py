@@ -55,6 +55,18 @@ def _normalize(df: pd.DataFrame, exact_floats: bool = False) -> pd.DataFrame:
     return df
 
 
+def duck_views(sf_dir: str):
+    """A DuckDB connection with one view per fixture table in ``sf_dir``."""
+    import duckdb
+
+    from finance_reporting_etl_spark.tables import TABLES
+
+    con = duckdb.connect()
+    for name in TABLES:
+        con.execute(f"CREATE VIEW {name} AS SELECT * FROM '{sf_dir}/{name}.parquet'")
+    return con
+
+
 def assert_matches_oracle(
     spark_df, duck_con, oracle_sql: str, exact_floats: bool = False
 ) -> None:

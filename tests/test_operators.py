@@ -3431,6 +3431,23 @@ def test_boosted_reg_stumps_matches_bruteforce(spark):
     assert int(got[1][5]) == sum(d["y"] ** 2 for d in data)
 
 
+def test_boosted_reg_stumps_rejects_non_integral_columns(spark):
+    """A fractional feature or target would be truncated by a cast; the
+    operator refuses it by name instead."""
+    import pytest
+
+    from finance_reporting_etl_spark.operators.ml import boosted_reg_stumps
+
+    base = spark.createDataFrame(
+        [(1, 0.5, 100, 1.5), (2, 1.5, 200, 2.5)],
+        "f_a long, f_b double, y long, y_frac double",
+    )
+    with pytest.raises(ValueError, match="'f_b'"):
+        boosted_reg_stumps(base, ["f_a", "f_b"], "y")
+    with pytest.raises(ValueError, match="'y_frac'"):
+        boosted_reg_stumps(base, ["f_a"], "y_frac")
+
+
 def test_pareto_frontier_matches_pairwise_dominance(spark):
     from finance_reporting_etl_spark.queries import CATALOG  # noqa: F401
     from pyspark.sql import Window

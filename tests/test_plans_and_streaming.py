@@ -228,6 +228,40 @@ def test_streaming_merge_upsert_equals_batch_merge(spark, sf_dir, tmp_path):
     assert want.exceptAll(got).count() == 0
 
 
+def test_streaming_merge_upsert_restores_state_left_aside(spark, sf_dir, tmp_path):
+    """A crash between overwrite_state_dir's two renames leaves the
+    state only as ``<target>__old``. The next replay must merge into
+    that state, not into an empty one."""
+    import os
+
+    from finance_reporting_etl_spark.operators.incremental import merge_latest
+    from finance_reporting_etl_spark.streaming.merge import streaming_merge_upsert
+
+    events = _read_parquet(spark, f"{sf_dir}/events.parquet").select(
+        "event_id", "ts", "user_id", "event_type", "value"
+    )
+    target = str(tmp_path / "merge_target")
+    old = merge_latest(
+        events.filter(F.col("event_id") % 2 == 0), ["user_id"], "ts", "event_id"
+    )
+    old.write.parquet(target + "__old")
+    batch = events.filter(F.col("event_id") % 2 == 1)
+    src = str(tmp_path / "merge_src")
+    batch.coalesce(1).write.parquet(src)
+    q = streaming_merge_upsert(
+        spark, src, spark.read.parquet(src).schema,
+        checkpoint_dir=str(tmp_path / "merge_ckpt"), target_dir=target,
+        keys=["user_id"], order_col="ts", tiebreak_col="event_id",
+    )
+    assert q.awaitTermination(120), "merge stream did not finish in time"
+    got = spark.read.parquet(target)
+    want = merge_latest(old.unionByName(batch), ["user_id"], "ts", "event_id")
+    assert not os.path.exists(target + "__old")
+    assert got.count() == want.count()
+    assert got.exceptAll(want).count() == 0
+    assert want.exceptAll(got).count() == 0
+
+
 def test_streaming_restart_resumes_exactly_once(spark, sf_dir, tmp_path):
     """Checkpoint recovery is the exactly-once contract: a restarted
     query must pick up ONLY unprocessed files (no re-emission of prior

@@ -1,5 +1,5 @@
 """Round-13 operator tests: the cross-engine float contract probed at
-its weakest point (foldexact cosine vs DuckDB list_dot_product within
+its weakest point (fold-exact cosine_arrow vs DuckDB list_dot_product within
 1 ulp of a half-micro rounding boundary — ADVICE r12), the bounded
 semantic-decon recall audit (fixed-size eval sample laws), and the
 data-derived cutoff queries (non-degenerate splits at the fixture's
@@ -15,7 +15,7 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from finance_reporting_etl_spark.functions.scalars import det_micro, det_micro_sql
-from finance_reporting_etl_spark.functions.vectors import cosine_arrow_foldexact
+from finance_reporting_etl_spark.functions.vectors import cosine_arrow
 from finance_reporting_etl_spark.queries import CATALOG
 from finance_reporting_etl_spark.tables import _read_parquet
 from tests.conftest import SF_SMOKE
@@ -49,7 +49,7 @@ def _boundary_pairs() -> list[tuple[list[float], list[float]]]:
 
 
 def test_foldexact_micro_matches_duckdb_at_half_micro_boundaries(spark):
-    """The exact-compare gates assume det_micro(foldexact cosine) ==
+    """The exact-compare gates assume det_micro(cosine_arrow) ==
     det_micro_sql(list_dot_product cosine) BIT-FOR-BIT. That holds
     because both accumulate sequentially left-to-right in float64 —
     an undocumented DuckDB implementation detail (ADVICE r12). This
@@ -65,7 +65,7 @@ def test_foldexact_micro_matches_duckdb_at_half_micro_boundaries(spark):
             "b": [p[1] for p in pairs],
         }
     )
-    cos_fx = cosine_arrow_foldexact()
+    cos_fx = cosine_arrow()
     got = {
         r["i"]: r["m"]
         for r in spark.createDataFrame(pdf)
@@ -280,9 +280,7 @@ def test_streaming_semdecon_equals_batch_screen(spark):
     """The streamed flag census must equal an independently computed
     batch screen: same split, same index/probe construction, same
     threshold — streaming adds arrival order, not semantics."""
-    from finance_reporting_etl_spark.functions.vectors import (
-        cosine_arrow_foldexact,
-    )
+    from finance_reporting_etl_spark.functions.vectors import cosine_arrow
     from finance_reporting_etl_spark.functions.scalars import det_micro
     from finance_reporting_etl_spark.operators.corpus import md5_bucket
     from finance_reporting_etl_spark.operators.similarity import (
@@ -295,7 +293,7 @@ def test_streaming_semdecon_equals_batch_screen(spark):
     emb = _read_parquet(spark, f"{SF_SMOKE}/embeddings.parquet")
     b = md5_bucket("vec_id", salt="semdecon")
     ev, tr = emb.filter(b < 13), emb.filter(b >= 13)
-    cos = cosine_arrow_foldexact()
+    cos = cosine_arrow()
     index = ivf_index(tr)
     probes = ivf_probes_for(ev, nprobe=4)
     vecs = emb.select(F.col("vec_id").alias("id"), F.col("embedding").alias("v"))

@@ -95,6 +95,51 @@ def test_rest_fetch_with_rate_limit():
         limiter.wait()
 
 
+def test_fetch_series_builds_fred_url_and_waits_on_limiter():
+    """fetch_data.py:5-11 analog: the FRED observations URL, one limiter
+    wait per call, payload returned as fetched."""
+    urls = []
+    sleeps = []
+    clock = iter(range(100))
+    limiter = rest.RateLimiter(
+        min_interval=15.0, max_calls=2, clock=lambda: float(next(clock)), sleep=sleeps.append
+    )
+
+    def fetch(url):
+        urls.append(url)
+        return FRED_PAYLOAD
+
+    base = "https://api.stlouisfed.org/fred/series/observations"
+    out = rest.fetch_series(fetch, base, "GDP", api_key="k", limiter=limiter)
+    rest.fetch_series(fetch, base, "CPIAUCSL", api_key="k", limiter=limiter)
+    assert out == FRED_PAYLOAD
+    assert urls == [
+        f"{base}?series_id=GDP&api_key=k&file_type=json",
+        f"{base}?series_id=CPIAUCSL&api_key=k&file_type=json",
+    ]
+    assert limiter.calls == 2
+    assert sleeps == [pytest.approx(14.0)]  # second call waits out the 15s cadence
+    with pytest.raises(RuntimeError):  # budget of 2 is spent
+        rest.fetch_series(fetch, base, "GDP", limiter=limiter)
+    assert len(urls) == 2
+
+
+def test_write_json_round_trips_through_read_json(spark, tmp_path):
+    """fetch_data.py:13-14 analog: the staged JSON sink reads back as
+    the same rows."""
+    src = spark.createDataFrame(
+        [("2023-01-01", "26500.0", 26500.0), ("2023-04-01", ".", None)],
+        "date string, value_raw string, value double",
+    )
+    path = str(tmp_path / "staged_json")
+    json_source.write_json(src, path)
+    back = json_source.read_json(spark, path, multiline=False)
+    assert sorted(back.columns) == sorted(src.columns)
+    assert {tuple(r[c] for c in src.columns) for r in back.collect()} == {
+        tuple(r) for r in src.collect()
+    }
+
+
 def test_payloads_to_df(spark):
     df = rest.payloads_to_df(spark, [FRED_PAYLOAD])
     flat = json_source.flatten_observations(df)

@@ -1,6 +1,9 @@
 """Time a named subset of catalog queries with the bench methodology
-(noop sink, best-of-2 interleaved passes) — the measure/re-measure
-loop of the optimization round without paying for the full catalog.
+(bench.time_queries: noop sink, interleaved passes, best time per
+query) — the measure/re-measure loop of the optimization round without
+paying for the full catalog. To tell plan drift from box drift, list an
+unchanged sibling first and compare against it: ``-n3 <sibling>
+<drifter ...>``.
 
 Usage: python tools/bench_subset.py [-nPASSES] name [name ...]
 """
@@ -9,26 +12,16 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-os.environ.setdefault("SPARK_GRAFT_RUN_ID", f"bsub-{os.getpid()}")
 
-import atexit  # noqa: E402
-import glob as _glob  # noqa: E402
-import shutil as _shutil  # noqa: E402
+from finance_reporting_etl_spark.runs import start_run  # noqa: E402
 
-from finance_reporting_etl_spark.queries import CATALOG, _AUX_DIR  # noqa: E402
+start_run("bsub")
+
+from bench import time_queries  # noqa: E402
+from finance_reporting_etl_spark.queries import CATALOG  # noqa: E402
 from finance_reporting_etl_spark.session import get_spark  # noqa: E402
-
-
-@atexit.register
-def _cleanup_aux() -> None:
-    if "bsub-" in _AUX_DIR:
-        _shutil.rmtree(_AUX_DIR, ignore_errors=True)
-    run = os.environ["SPARK_GRAFT_RUN_ID"].replace("-", "_")
-    for d in _glob.glob(f"/root/repo/spark-warehouse/bkt_*_{run}"):
-        _shutil.rmtree(d, ignore_errors=True)
 
 
 def main() -> None:
@@ -45,19 +38,12 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark(app_name="bench-subset")
     spark.range(1).count()
-    timings = {n: float("inf") for n in args}
-    for _ in range(passes):
-        for name in args:
-            spark.sparkContext.setJobDescription(name)
-            t0 = time.perf_counter()
-            CATALOG[name].fn(spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            timings[name] = min(timings[name], time.perf_counter() - t0)
-            spark.sparkContext.setJobDescription(None)
-    out = {n: round(t, 3) for n, t in timings.items()}
+    best, errors, _ = time_queries(spark, sf_dir, args, passes)
+    out = {n: round(best[n], 3) for n in args if n in best}
     out["_total"] = round(sum(out.values()), 3)
     print(json.dumps(out))
+    if errors:
+        raise SystemExit(f"bench_subset: errors {json.dumps(errors)}")
 
 
 if __name__ == "__main__":

@@ -1,8 +1,9 @@
-"""Full-catalog exact-oracle sweep at one SF (default sf0.1) — the
-end-of-round ritual that has caught latent bugs since r8. Prints one
-line per query and a final PASS/FAIL census.
+"""Exact-oracle sweep at one SF (default sf0.1): every catalog query,
+or only the named ones, against its DuckDB oracle with the float
+re-rounding off (the gate-window harness). Prints one line per query
+and a final census; exits 1 on any failure.
 
-    SPARK_GRAFT_SWEEP_SF=/root/testdata/sf0.1 python tools/full_sweep.py
+    SPARK_GRAFT_SWEEP_SF=/root/testdata/sf0.1 python tools/full_sweep.py [name ...]
 """
 
 from __future__ import annotations
@@ -13,46 +14,41 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from finance_reporting_etl_spark.runs import start_run  # noqa: E402
+
 # Isolate this sweep's oracle_aux / bucketed tables from concurrent
-# gate/bench/pytest processes (VERDICT r13 task 4; the r13 freeze sweep
-# recorded one false 401/402 from exactly this race). Cleaned up atexit.
-os.environ.setdefault("SPARK_GRAFT_RUN_ID", f"sweep-{os.getpid()}")
+# gate/bench/pytest processes (the r13 freeze sweep recorded one false
+# 401/402 from exactly this race).
+start_run("sweep")
 
-import atexit
-import glob
-import shutil
-
-import duckdb
-
-from finance_reporting_etl_spark.queries import CATALOG, _AUX_DIR
-from finance_reporting_etl_spark.session import get_spark
-from tests.oracle_util import assert_matches_oracle
+from finance_reporting_etl_spark.queries import CATALOG  # noqa: E402
+from finance_reporting_etl_spark.session import get_spark  # noqa: E402
+from tests.oracle_util import assert_matches_oracle, duck_views  # noqa: E402
 
 
-@atexit.register
-def _cleanup_aux() -> None:
-    if "sweep-" in _AUX_DIR:
-        shutil.rmtree(_AUX_DIR, ignore_errors=True)
-    run = os.environ["SPARK_GRAFT_RUN_ID"].replace("-", "_")
-    for d in glob.glob("/root/repo/spark-warehouse/bkt_*_" + run):
-        shutil.rmtree(d, ignore_errors=True)
+def main() -> int:
+    sf = os.environ.get("SPARK_GRAFT_SWEEP_SF", "/root/testdata/sf0.1")
+    names = sys.argv[1:] or list(CATALOG)
+    unknown = [n for n in names if n not in CATALOG]
+    if unknown:
+        raise SystemExit(f"full_sweep: unknown queries {unknown}")
+    spark = get_spark(app_name="full_sweep", shuffle_partitions=32)
+    con = duck_views(sf)
+    fails: list[str] = []
+    t0 = time.monotonic()
+    for i, name in enumerate(names):
+        e = CATALOG[name]
+        try:
+            assert_matches_oracle(e.fn(spark, sf), con, e.oracle, exact_floats=True)
+            print(f"ok   {i + 1:3d}/{len(names)} {name}", flush=True)
+        except Exception as ex:  # noqa: BLE001
+            fails.append(name)
+            print(f"FAIL {i + 1:3d}/{len(names)} {name}: {str(ex)[:300]}", flush=True)
+    dt = time.monotonic() - t0
+    print(f"SWEEP {len(names) - len(fails)}/{len(names)} exact at {sf}"
+          f" in {dt:.0f}s; fails={fails}")
+    return 1 if fails else 0
 
-SF = os.environ.get("SPARK_GRAFT_SWEEP_SF", "/root/testdata/sf0.1")
 
-spark = get_spark(app_name="full_sweep", shuffle_partitions=32)
-con = duckdb.connect()
-for t in "region nation customer supplier part orders lineitem events documents embeddings".split():
-    con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF}/{t}.parquet'")
-
-fails: list[str] = []
-t0 = time.monotonic()
-for i, (name, e) in enumerate(CATALOG.items()):
-    try:
-        assert_matches_oracle(e.fn(spark, SF), con, e.oracle, exact_floats=True)
-        print(f"ok   {i + 1:3d}/{len(CATALOG)} {name}", flush=True)
-    except Exception as ex:
-        fails.append(name)
-        print(f"FAIL {i + 1:3d}/{len(CATALOG)} {name}: {str(ex)[:300]}", flush=True)
-dt = time.monotonic() - t0
-print(f"SWEEP {len(CATALOG) - len(fails)}/{len(CATALOG)} exact at {SF}"
-      f" in {dt:.0f}s; fails={fails}")
+if __name__ == "__main__":
+    raise SystemExit(main())

@@ -18,27 +18,15 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-# Isolate from concurrent gate/bench/sweep/pytest processes (VERDICT
-# r13 task 4): plan-building executes build-time work (stream replays,
-# _persist_aux writes), so it races on the shared aux dir like any
-# other runner. Cleaned up atexit.
-os.environ.setdefault("SPARK_GRAFT_RUN_ID", f"audit-{os.getpid()}")
+from finance_reporting_etl_spark.runs import start_run  # noqa: E402
 
-import atexit  # noqa: E402
-import glob  # noqa: E402
-import shutil  # noqa: E402
+# Isolate from concurrent gate/bench/sweep/pytest processes: plan
+# building executes build-time work (stream replays, _persist_aux
+# writes), so it races on the shared aux dir like any other runner.
+start_run("audit")
 
-from finance_reporting_etl_spark.queries import CATALOG, _AUX_DIR  # noqa: E402
+from finance_reporting_etl_spark.queries import CATALOG  # noqa: E402
 from finance_reporting_etl_spark.session import get_spark  # noqa: E402
-
-
-@atexit.register
-def _cleanup_aux() -> None:
-    if "audit-" in _AUX_DIR:
-        shutil.rmtree(_AUX_DIR, ignore_errors=True)
-    run = os.environ["SPARK_GRAFT_RUN_ID"].replace("-", "_")
-    for d in glob.glob("/root/repo/spark-warehouse/bkt_*_" + run):
-        shutil.rmtree(d, ignore_errors=True)
 
 
 SF = os.environ.get("SPARK_GRAFT_AUDIT_SF", "/root/testdata/sf0.001")

@@ -27,15 +27,20 @@ inside the incoming gate window union _GATE_NEXT.
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql.types import DoubleType, FloatType
+from finance_reporting_etl_spark.runs import start_run  # noqa: E402
 
-from finance_reporting_etl_spark.queries import CATALOG, _GATE_NEXT
-from finance_reporting_etl_spark.session import get_spark
+start_run("triage")
+
+from pyspark.sql.types import DoubleType, FloatType  # noqa: E402
+
+from finance_reporting_etl_spark.queries import CATALOG, _GATE_NEXT  # noqa: E402
+from finance_reporting_etl_spark.session import get_spark  # noqa: E402
 
 SF = "/root/testdata/sf0.001"
 
