@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from finance_reporting_etl_spark.tables import _read_parquet
+
 
 def checked_swap(fs, live, staged, old) -> None:
     """Rename-aside swap with every Hadoop ``rename()`` boolean checked.
@@ -187,7 +189,7 @@ def upsert_parquet(
     """Read-merge view over existing + incoming (no rewrite): union by
     name then latest-per-key. For true compaction, write the result back
     partition-by-partition during low-traffic windows."""
-    existing = spark.read.parquet(existing_path)
+    existing = _read_parquet(spark, existing_path)
     merged = existing.unionByName(incoming, allowMissingColumns=True)
     return merge_latest(merged, keys, order_col, tiebreak_col)
 
@@ -308,7 +310,7 @@ def compact_partition(
         return 0
     total = fs.getContentSummary(p).getLength()
     n_files = max(1, math.ceil(total / target_bytes))
-    df = spark.read.parquet(part_dir)
+    df = _read_parquet(spark, part_dir)
     tmp = f"{path}/_compact_tmp_{partition_col}={partition_value}"
     df.repartition(n_files).write.mode("overwrite").parquet(tmp)
     # swap via rename-aside (checked_swap): old data survives as
@@ -349,7 +351,7 @@ def forget_keys(
 
     Returns the number of partitions rewritten.
     """
-    df = spark.read.parquet(path)
+    df = _read_parquet(spark, path)
     affected = [
         r[0]
         for r in df.filter(F.col(key_col).isin(keys))
@@ -366,7 +368,7 @@ def forget_keys(
         # rewrite: ~isin(keys) evaluates to NULL for NULL keys and
         # filter drops NULL predicates — without the isNull() arm a
         # GDPR delete would silently destroy unrelated rows (review)
-        keep = spark.read.parquet(part_dir).filter(
+        keep = _read_parquet(spark, part_dir).filter(
             (~F.col(key_col).isin(keys)) | F.col(key_col).isNull()
         )
         tmp = f"{path}/_forget_tmp_{partition_col}={pv}"

@@ -25,6 +25,8 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
+from finance_reporting_etl_spark.tables import _read_parquet
+
 
 @dataclass
 class Model:
@@ -125,7 +127,7 @@ class ModelRegistry:
                 if model.partition_cols:
                     writer = writer.partitionBy(*model.partition_cols)
                 writer.parquet(path)
-                df = spark.read.parquet(path)
+                df = _read_parquet(spark, path)
                 if model.partition_cols:
                     # partitionBy moves partition cols to the end of the
                     # read-back schema; restore the declared column order

@@ -18,6 +18,11 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# 24 GiB, or half the host's RAM when that is less: G1 grows a heap whose
+# limit exceeds physical memory until the kernel kills the driver JVM
+DEFAULT_DRIVER_MEMORY = (
+    f"{min(24 << 10, os.sysconf('SC_PAGE_SIZE') * os.sysconf('SC_PHYS_PAGES') >> 21)}m"
+)
 
 
 def get_spark(
@@ -57,7 +62,7 @@ def get_spark(
         .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
         # effective only when this call creates the JVM (spark-submit or
         # first getOrCreate); a pre-existing session keeps its own value
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", DEFAULT_DRIVER_MEMORY))
         .config("spark.ui.enabled", "false")
         # Parquet scan tasks bounded to 128 MiB — at 100 TB this yields
         # ~800k scan tasks, the right granularity for 1000 executors.

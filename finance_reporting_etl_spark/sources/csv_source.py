@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from finance_reporting_etl_spark.tables import _read_parquet
+
 
 def write_csv_staged(
     df: DataFrame,
@@ -57,4 +59,4 @@ def bulk_load_csv(
     (the reference loads into raw_financial_data per DAG run)."""
     df = read_csv(spark, csv_path, schema=schema)
     df.write.mode(mode).parquet(table_path)
-    return spark.read.parquet(table_path)
+    return _read_parquet(spark, table_path)

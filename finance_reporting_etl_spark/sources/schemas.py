@@ -15,6 +15,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from finance_reporting_etl_spark.tables import _read_parquet
+
 # sql/init_db.sql:1-5 — note value intentionally TEXT (cast in staging)
 RAW_FINANCIAL_DATA_SCHEMA = T.StructType(
     [
@@ -52,7 +54,7 @@ def create_table(spark: SparkSession, name: str, schema: T.StructType, path: str
     empty = spark.createDataFrame([], schema)
     if path is not None:
         empty.write.mode("ignore").parquet(path)
-        df = spark.read.parquet(path)
+        df = _read_parquet(spark, path)
     else:
         df = empty
     df.createOrReplaceTempView(name)

@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from finance_reporting_etl_spark.functions.scalars import det_round
+from finance_reporting_etl_spark.tables import _read_parquet
 from pyspark.sql import types as T
 
 
@@ -119,12 +120,12 @@ def replay_interval_join(spark, events, how: str):
             spark,
             f"{src}/views",
             f"{src}/purchases",
-            spark.read.parquet(f"{src}/views").schema,
+            _read_parquet(spark, f"{src}/views").schema,
             checkpoint_dir=f"{tmp}/ckpt",
             output_dir=f"{tmp}/out",
             how=how,
         ),
-        lambda tmp: spark.read.parquet(f"{tmp}/out"),
+        lambda tmp: _read_parquet(spark, f"{tmp}/out"),
         prefix="stream_join_",
         label=f"streaming {how} interval join",
         infer_schema=False,  # src holds views/ + purchases/ subdirs

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from finance_reporting_etl_spark.operators.incremental import merge_latest
+from finance_reporting_etl_spark.tables import _read_parquet
 
 
 def overwrite_state_dir(df: DataFrame, path: str) -> None:
@@ -100,7 +101,7 @@ def _read_parquet_if_exists(sess, path: str):
             return None
         if not fs.rename(Path(path + "__old"), hp):
             raise IOError(f"restoring {path}__old -> {path} failed")
-    return sess.read.parquet(path)
+    return _read_parquet(sess, path)
 
 
 def streaming_merge_upsert(

@@ -38,6 +38,8 @@ from typing import Callable, Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from finance_reporting_etl_spark.tables import _read_parquet
+
 
 def stage_microbatches(
     batches: Sequence[DataFrame],
@@ -115,14 +117,14 @@ def run_file_stream(
     ``read_result(tmp)`` reads the sink. The result is snapshotted
     with ``localCheckpoint(eager=True)`` before the tempdir is
     removed. Pass ``infer_schema=False`` when ``src`` holds per-stream
-    SUBdirectories (multi-source replays) — reading the parent for a
-    schema would fail; ``start_stream`` then receives None and derives
+    SUBdirectories (multi-source replays) — the parent has no single
+    schema; ``start_stream`` then receives None and derives
     schemas from its own subdirs."""
     tmp = tempfile.mkdtemp(prefix=prefix)
     try:
         src = f"{tmp}/src"
         write_source(src)
-        schema = spark.read.parquet(src).schema if infer_schema else None
+        schema = _read_parquet(spark, src).schema if infer_schema else None
         q = start_stream(src, schema, tmp)
         if not q.awaitTermination(timeout):
             q.stop()
