@@ -1160,7 +1160,6 @@ def q_streaming_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, src, schema, checkpoint_dir=f"{tmp}/ckpt", output_table=name
         ),
         lambda tmp: spark.table(name),
-        prefix="stream_rollup_",
         label="streaming_hourly_rollup",
     )
 
@@ -1190,7 +1189,6 @@ def q_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, src, schema, checkpoint_dir=f"{tmp}/ckpt", output_table=name
         ),
         lambda tmp: spark.table(name),
-        prefix="stream_dedup_",
         label="streaming_dedup_events",
     )
 
@@ -1224,7 +1222,6 @@ def q_stateful_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max_by("n_events", "upd_seq").alias("n_events"),
             det_round(F.max_by("total_value", "upd_seq"), 4).alias("total_value"),
         ),
-        prefix="stateful_totals_",
         label="stateful_user_totals",
     )
 
@@ -1824,7 +1821,6 @@ def q_streaming_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
             keys=["user_id"], order_col="ts", tiebreak_col="event_id",
         ),
         lambda tmp: _read_parquet(spark, f"{tmp}/target"),
-        prefix="stream_merge_",
         label="streaming_merge_upsert",
     )
 
@@ -2279,7 +2275,6 @@ def q_streaming_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, src, schema, checkpoint_dir=f"{tmp}/ckpt", output_table=name
         ),
         lambda tmp: spark.table(name),
-        prefix="stream_sess_",
         label="streaming_sessionize_events",
     )
 
@@ -2338,7 +2333,6 @@ def q_streaming_watermark_late_drop(spark: SparkSession, sf_dir: str) -> DataFra
             bucket="1 day", watermark="7 days", max_files_per_trigger=1,
         ),
         lambda tmp: _read_parquet(spark, f"{tmp}/out"),
-        prefix="stream_wm_",
         label="streaming_watermark_late_drop",
     )
 
@@ -2391,7 +2385,6 @@ def q_stateful_session_timeout(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, src, schema, checkpoint_dir=f"{tmp}/ckpt", output_table=name
         ),
         lambda tmp: spark.table(name),
-        prefix="stream_ttl_",
         label="stateful_session_timeout",
     )
 
@@ -2754,8 +2747,7 @@ def q_streaming_ann_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream arrives as three disjoint micro-batches, each assigning its
     vectors to fixed IVF cells (seeded centroids — cell assignment is
     append-only state, the mergeable-index property) and writing its
-    postings to a batch_id-partitioned sink, so at-least-once replays
-    overwrite rather than duplicate. Because assignment is
+    postings to its own batch_id partition of the sink. Because assignment is
     deterministic per vector, the maintained index is row-identical
     to the one-shot `ivf_index` build; serving top-k from it must
     therefore match the persisted-index oracle exactly — which is
@@ -2766,37 +2758,19 @@ def q_streaming_ann_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
         ivf_topk_from_index,
     )
     from finance_reporting_etl_spark.streaming.staging import (
-        run_file_stream,
+        replay_partials,
         stage_microbatches,
     )
 
     emb = _t(spark, sf_dir, "embeddings")
-
-    def start(src, schema, tmp):
-        def fold(batch, batch_id):
-            ivf_index(batch).write.mode("overwrite").parquet(
-                f"{tmp}/sink/batch_id={batch_id}"
-            )
-
-        return (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-            .writeStream.foreachBatch(fold)
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-
-    maintained = run_file_stream(
+    maintained = replay_partials(
         spark,
         lambda src: stage_microbatches(
             [emb.filter(F.col("vec_id") % 3 == i) for i in range(3)], src
         ),
-        start,
-        lambda tmp: _read_parquet(spark, f"{tmp}/sink").select("id", "cell"),
-        prefix="stream_ivf_",
-        label="streaming_ann_index_maintain",
+        ivf_index,
+        lambda partials: partials.select("id", "cell"),
+        "streaming_ann_index_maintain",
     )
     index = _persist_aux(spark, maintained, "ivf_index_stream")
     probes = _persist_aux(
@@ -3057,12 +3031,12 @@ def q_streaming_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     any corpus size."""
     from finance_reporting_etl_spark.functions.text import whitespace_tokens
     from finance_reporting_etl_spark.operators.sketches import (
+        cms_cell_counts,
         cms_estimates,
         cms_placements,
     )
-    from finance_reporting_etl_spark.streaming.merge import streaming_cms_maintain
     from finance_reporting_etl_spark.streaming.staging import (
-        run_file_stream,
+        replay_partials,
         stage_microbatches,
     )
 
@@ -3073,24 +3047,25 @@ def q_streaming_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cells = _persist_aux(spark, cms_placements(tc), "cms_placements_stream")
 
-    sketch = run_file_stream(
+    def batch_delta(batch: DataFrame) -> DataFrame:
+        btc = (
+            batch.select(toks_expr.alias("token"))
+            .groupBy("token")
+            .agg(F.count(F.lit(1)).alias("cnt"))
+        )
+        return cms_cell_counts(btc, F.broadcast(cells))
+
+    sketch = replay_partials(
         spark,
         lambda src: stage_microbatches(
             [docs.filter(F.col("doc_id") % 3 == i) for i in range(3)], src
         ),
-        lambda src, schema, tmp: streaming_cms_maintain(
-            spark, src, schema,
-            checkpoint_dir=f"{tmp}/ckpt", sketch_dir=f"{tmp}/sketch",
-            placements=cells, token_expr=toks_expr,
+        batch_delta,
+        # merging the per-batch deltas IS the sketch's cell-wise addition
+        lambda partials: partials.groupBy("d", "col").agg(
+            F.sum("cell_cnt").alias("cell_cnt")
         ),
-        # per-batch deltas live in batch_id partitions (idempotent
-        # under foreachBatch replays); merging them IS the sketch's
-        # cell-wise addition
-        lambda tmp: _read_parquet(spark, f"{tmp}/sketch")
-        .groupBy("d", "col")
-        .agg(F.sum("cell_cnt").alias("cell_cnt")),
-        prefix="stream_cms_",
-        label="streaming_heavy_hitters",
+        "streaming_heavy_hitters",
     )
     est = cms_estimates(cells, sketch)
     total = tc.agg(F.sum("cnt").alias("t"))
@@ -3671,7 +3646,6 @@ def q_cdc_changelog_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("ts").alias("updated_at"),
             det_round("value", 6).alias("value"),
         ),
-        prefix="cdc_",
         label="cdc_changelog_apply",
     )
 
@@ -4205,7 +4179,6 @@ def q_streaming_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
             bucket="6 hours", slide="2 hours", watermark="12 hours",
         ),
         lambda tmp: spark.table(name),
-        prefix="stream_slide_",
         label="streaming_sliding_window_counts",
     )
 
@@ -4310,7 +4283,6 @@ def q_streaming_static_dim_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             checkpoint_dir=f"{tmp}/ckpt", output_table=name,
         ),
         lambda tmp: spark.table(name),
-        prefix="stream_dim_",
         label="streaming_static_dim_join",
     )
 
@@ -5357,11 +5329,10 @@ def q_streaming_value_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     table reads identically to the one-shot batch computation (the
     shared oracle proves it). Replayed as 3 micro-batches; reference
     (period-A) counts stay a static table. State per batch: 10 rows.
-    Operators: streaming.drift.streaming_bin_count_fold +
+    Operators: streaming.staging.replay_partials +
     operators.drift.psi_from_counts."""
     from finance_reporting_etl_spark.operators.drift import psi_from_counts, value_bin
-    from finance_reporting_etl_spark.streaming.drift import streaming_bin_count_fold
-    from finance_reporting_etl_spark.streaming.staging import run_file_stream
+    from finance_reporting_etl_spark.streaming.staging import replay_partials
 
     ev = _t(spark, sf_dir, "events")
     # Data-derived period boundary (exact epoch-micros midpoint; the
@@ -5378,22 +5349,19 @@ def q_streaming_value_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("bin")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_a"))
     )
-    b_counts = run_file_stream(
+    b_counts = replay_partials(
         spark,
         lambda src: ev.filter(F.unix_micros("ts") >= mid_us)
         .select("ts", "value")
         .repartition(3)
         .write.parquet(src),
-        lambda src, schema, tmp: streaming_bin_count_fold(
-            spark, src, schema,
-            checkpoint_dir=f"{tmp}/ckpt", sink_dir=f"{tmp}/sink",
-            bin_expr=value_bin(),
-        ),
-        lambda tmp: _read_parquet(spark, f"{tmp}/sink")
+        lambda batch: batch.select(value_bin())
         .groupBy("bin")
-        .agg(F.sum("n").cast("bigint").alias("n_b")),
-        prefix="stream_psi_",
-        label="streaming_value_drift_psi",
+        .agg(F.count(F.lit(1)).cast("bigint").alias("n")),
+        lambda partials: partials.groupBy("bin").agg(
+            F.sum("n").cast("bigint").alias("n_b")
+        ),
+        "streaming_value_drift_psi",
     )
     return psi_from_counts(a_counts, b_counts)
 
@@ -5845,10 +5813,10 @@ def q_streaming_ohlc_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
     merge-correctness end to end."""
     from finance_reporting_etl_spark.streaming.rollup import (
         merge_ohlc_partials,
-        streaming_ohlc_maintain,
+        ohlc_partials,
     )
     from finance_reporting_etl_spark.streaming.staging import (
-        run_file_stream,
+        replay_partials,
         stage_microbatches,
     )
 
@@ -5856,19 +5824,15 @@ def q_streaming_ohlc_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "ts", "event_type", "value"
     )
     batches = [ev.filter(F.col("event_id") % 3 == i) for i in range(3)]
-    return run_file_stream(
+    return replay_partials(
         spark,
         lambda src: stage_microbatches(batches, src),
-        lambda src, schema, tmp: streaming_ohlc_maintain(
-            spark, src, schema,
-            checkpoint_dir=f"{tmp}/ckpt", bars_dir=f"{tmp}/bars",
-        ),
-        lambda tmp: merge_ohlc_partials(_read_parquet(spark, f"{tmp}/bars")).select(
+        ohlc_partials,
+        lambda partials: merge_ohlc_partials(partials).select(
             "event_type", "day", "open_cents", "high_cents",
             "low_cents", "close_cents", "n_ticks",
         ),
-        prefix="stream_ohlc_",
-        label="streaming_ohlc_maintain",
+        "streaming_ohlc_maintain",
     )
 
 
@@ -8956,11 +8920,8 @@ def q_streaming_trial_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     the one-shot batch computation no matter where the micro-batch
     boundaries fall (the shared oracle proves it). Replayed as 3
     micro-batches; sink state per batch: one row per touched (month,
-    account). Operator: streaming.rollup.streaming_grouped_sum_fold."""
-    from finance_reporting_etl_spark.streaming.rollup import (
-        streaming_grouped_sum_fold,
-    )
-    from finance_reporting_etl_spark.streaming.staging import run_file_stream
+    account). Operator: streaming.staging.replay_partials."""
+    from finance_reporting_etl_spark.streaming.staging import replay_partials
 
     def batch_agg(batch: DataFrame) -> DataFrame:
         return (
@@ -8973,23 +8934,18 @@ def q_streaming_trial_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    stream_part = run_file_stream(
+    stream_part = replay_partials(
         spark,
         lambda src: _tb_orders(spark, sf_dir).repartition(3).write.parquet(src),
-        lambda src, schema, tmp: streaming_grouped_sum_fold(
-            spark, src, schema,
-            checkpoint_dir=f"{tmp}/ckpt", sink_dir=f"{tmp}/sink",
-            batch_agg=batch_agg,
-        ),
-        lambda tmp: _read_parquet(spark, f"{tmp}/sink")
+        batch_agg,
+        lambda partials: partials
         .groupBy("month", "account")
         .agg(
             F.sum("n").cast("bigint").alias("n"),
             F.sum("d").cast("bigint").alias("d"),
             F.sum("c").cast("bigint").alias("c"),
         ),
-        prefix="stream_tb_",
-        label="streaming_trial_balance",
+        "streaming_trial_balance",
     )
     static_part = (
         _journal_return_legs(_tb_returns(spark, sf_dir))
@@ -9851,13 +9807,10 @@ def q_streaming_entropy_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     are order-free mergeable integers, so the result is bit-identical
     to the one-shot batch query regardless of micro-batch boundaries
     (the SHARED event_type_entropy_daily oracle proves it). Operator:
-    streaming.rollup.streaming_grouped_sum_fold."""
+    streaming.staging.replay_partials."""
     from pyspark.sql import Window
 
-    from finance_reporting_etl_spark.streaming.rollup import (
-        streaming_grouped_sum_fold,
-    )
-    from finance_reporting_etl_spark.streaming.staging import run_file_stream
+    from finance_reporting_etl_spark.streaming.staging import replay_partials
 
     def batch_agg(batch: DataFrame) -> DataFrame:
         return (
@@ -9866,10 +9819,9 @@ def q_streaming_entropy_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).agg(F.count(F.lit(1)).cast("bigint").alias("c"))
         )
 
-    def finish(tmp: str) -> DataFrame:
+    def finish(partials: DataFrame) -> DataFrame:
         c = (
-            _read_parquet(spark, f"{tmp}/sink")
-            .groupBy("day", "event_type")
+            partials.groupBy("day", "event_type")
             .agg(F.sum("c").cast("bigint").alias("c"))
         )
         w = c.withColumn(
@@ -9894,17 +9846,12 @@ def q_streaming_entropy_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     src_df = _t(spark, sf_dir, "events").select("ts", "event_type")
-    return run_file_stream(
+    return replay_partials(
         spark,
         lambda src: src_df.repartition(3).write.parquet(src),
-        lambda src, schema, tmp: streaming_grouped_sum_fold(
-            spark, src, schema,
-            checkpoint_dir=f"{tmp}/ckpt", sink_dir=f"{tmp}/sink",
-            batch_agg=batch_agg,
-        ),
+        batch_agg,
         finish,
-        prefix="stream_entropy_",
-        label="streaming_entropy_monitor",
+        "streaming_entropy_monitor",
     )
 
 
@@ -10073,11 +10020,8 @@ def q_streaming_ar_aging(spark: SparkSession, sf_dir: str) -> DataFrame:
     order-free mergeable integers, so the merged aging equals the
     one-shot batch computation regardless of micro-batch boundaries
     (the SHARED ar_aging_buckets oracle proves it). Operator:
-    streaming.rollup.streaming_grouped_sum_fold."""
-    from finance_reporting_etl_spark.streaming.rollup import (
-        streaming_grouped_sum_fold,
-    )
-    from finance_reporting_etl_spark.streaming.staging import run_file_stream
+    streaming.staging.replay_partials."""
+    from finance_reporting_etl_spark.streaming.staging import replay_partials
 
     cdim = _t(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     age = F.datediff(
@@ -10109,22 +10053,17 @@ def q_streaming_ar_aging(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("o_orderstatus") == "O")
         & (F.col("o_orderdate").cast("date") <= F.lit("1998-08-01").cast("date"))
     ).select("o_custkey", "o_orderdate", "o_totalprice")
-    return run_file_stream(
+    return replay_partials(
         spark,
         lambda src: src_df.repartition(3).write.parquet(src),
-        lambda src, schema, tmp: streaming_grouped_sum_fold(
-            spark, src, schema,
-            checkpoint_dir=f"{tmp}/ckpt", sink_dir=f"{tmp}/sink",
-            batch_agg=batch_agg,
-        ),
-        lambda tmp: _read_parquet(spark, f"{tmp}/sink")
+        batch_agg,
+        lambda partials: partials
         .groupBy("segment", "bucket")
         .agg(
             F.sum("n").cast("bigint").alias("n_orders"),
             F.sum("c").cast("bigint").alias("ar_cents"),
         ),
-        prefix="stream_aging_",
-        label="streaming_ar_aging",
+        "streaming_ar_aging",
     )
 
 
@@ -10247,11 +10186,8 @@ def q_streaming_balance_rollforward(spark: SparkSession, sf_dir: str) -> DataFra
     merged ledger. Integer partials are order-free mergeable, so the
     statement is bit-identical to the one-shot batch mart no matter
     where the micro-batch boundaries fall (the SHARED oracle proves
-    it). Operator: streaming.rollup.streaming_grouped_sum_fold."""
-    from finance_reporting_etl_spark.streaming.rollup import (
-        streaming_grouped_sum_fold,
-    )
-    from finance_reporting_etl_spark.streaming.staging import run_file_stream
+    it). Operator: streaming.staging.replay_partials."""
+    from finance_reporting_etl_spark.streaming.staging import replay_partials
 
     def batch_agg(batch: DataFrame) -> DataFrame:
         return (
@@ -10263,22 +10199,17 @@ def q_streaming_balance_rollforward(spark: SparkSession, sf_dir: str) -> DataFra
             )
         )
 
-    stream_part = run_file_stream(
+    stream_part = replay_partials(
         spark,
         lambda src: _tb_orders(spark, sf_dir).repartition(3).write.parquet(src),
-        lambda src, schema, tmp: streaming_grouped_sum_fold(
-            spark, src, schema,
-            checkpoint_dir=f"{tmp}/ckpt", sink_dir=f"{tmp}/sink",
-            batch_agg=batch_agg,
-        ),
-        lambda tmp: _read_parquet(spark, f"{tmp}/sink")
+        batch_agg,
+        lambda partials: partials
         .groupBy("month", "account")
         .agg(
             F.sum("d").cast("bigint").alias("d"),
             F.sum("c").cast("bigint").alias("c"),
         ),
-        prefix="stream_rollfwd_",
-        label="streaming_balance_rollforward",
+        "streaming_balance_rollforward",
     )
     static_part = (
         _journal_return_legs(_tb_returns(spark, sf_dir))
@@ -10366,30 +10297,22 @@ def q_streaming_cash_flow_indirect(spark: SparkSession, sf_dir: str) -> DataFram
     and the statement assembles exactly as the batch mart — integer
     partials are order-free mergeable, so micro-batch boundaries move
     nothing (the SHARED oracle proves it). Operator:
-    streaming.rollup.streaming_grouped_sum_fold."""
-    from finance_reporting_etl_spark.streaming.rollup import (
-        streaming_grouped_sum_fold,
-    )
-    from finance_reporting_etl_spark.streaming.staging import run_file_stream
+    streaming.staging.replay_partials."""
+    from finance_reporting_etl_spark.streaming.staging import replay_partials
 
     def batch_agg(batch: DataFrame) -> DataFrame:
         return batch.groupBy("month").agg(
             F.sum("cents").cast("bigint").alias("c")
         )
 
-    rev = run_file_stream(
+    rev = replay_partials(
         spark,
         lambda src: _tb_orders(spark, sf_dir).repartition(3).write.parquet(src),
-        lambda src, schema, tmp: streaming_grouped_sum_fold(
-            spark, src, schema,
-            checkpoint_dir=f"{tmp}/ckpt", sink_dir=f"{tmp}/sink",
-            batch_agg=batch_agg,
-        ),
-        lambda tmp: _read_parquet(spark, f"{tmp}/sink")
+        batch_agg,
+        lambda partials: partials
         .groupBy("month")
         .agg(F.sum("c").cast("bigint").alias("revenue_cents")),
-        prefix="stream_cf_",
-        label="streaming_cash_flow_indirect",
+        "streaming_cash_flow_indirect",
     )
     ret = _tb_returns(spark, sf_dir).groupBy("month").agg(
         F.sum("cents").cast("bigint").alias("returns_cents")
@@ -12185,10 +12108,7 @@ def q_streaming_intercompany_elimination(spark: SparkSession, sf_dir: str) -> Da
     one-shot batch mart no matter where micro-batch boundaries fall —
     the SHARED oracle proves it. Replayed as 3 micro-batches; the ppm
     share is applied once at read-back (never folded)."""
-    from finance_reporting_etl_spark.streaming.rollup import (
-        streaming_grouped_sum_fold,
-    )
-    from finance_reporting_etl_spark.streaming.staging import run_file_stream
+    from finance_reporting_etl_spark.streaming.staging import replay_partials
 
     o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     cst = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
@@ -12228,7 +12148,7 @@ def q_streaming_intercompany_elimination(spark: SparkSession, sf_dir: str) -> Da
             )
         )
 
-    out = run_file_stream(
+    out = replay_partials(
         spark,
         # stage only the four columns the fold reads (guide: project
         # before the exchange — the other 12 lineitem columns were
@@ -12237,12 +12157,8 @@ def q_streaming_intercompany_elimination(spark: SparkSession, sf_dir: str) -> Da
         .select("l_orderkey", "l_suppkey", "l_extendedprice", "l_discount")
         .repartition(3)
         .write.parquet(src),
-        lambda src, schema, tmp: streaming_grouped_sum_fold(
-            spark, src, schema,
-            checkpoint_dir=f"{tmp}/ckpt", sink_dir=f"{tmp}/sink",
-            batch_agg=batch_agg,
-        ),
-        lambda tmp: _read_parquet(spark, f"{tmp}/sink")
+        batch_agg,
+        lambda partials: partials
         .groupBy("entity")
         .agg(
             F.sum("n").cast("bigint").alias("n_lines"),
@@ -12261,8 +12177,7 @@ def q_streaming_intercompany_elimination(spark: SparkSession, sf_dir: str) -> Da
             "entity", "n_lines", "gross_cents", "intercompany_cents",
             "external_cents", "intercompany_ppm",
         ),
-        prefix="stream_ic_",
-        label="streaming_intercompany_elimination",
+        "streaming_intercompany_elimination",
     )
     odim.unpersist()
     return out
@@ -12533,6 +12448,53 @@ def q_mixture_temperature_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
+def _kmv_hashed(keys: DataFrame) -> DataFrame:
+    """(col_name, val, h32): the distinct values of the three lineitem
+    key columns, each hashed to a deterministic 32-bit uniform (md5 of
+    the value + 'kmv')."""
+    c = keys.selectExpr(
+        "CAST(l_partkey AS BIGINT) AS l_partkey",
+        "CAST(l_suppkey AS BIGINT) AS l_suppkey",
+        "CAST(l_orderkey AS BIGINT) AS l_orderkey",
+    ).selectExpr(
+        "stack(3, 'l_partkey', l_partkey, 'l_suppkey', l_suppkey,"
+        " 'l_orderkey', l_orderkey) AS (col_name, val)"
+    ).distinct()
+    h32 = F.conv(
+        F.substring(F.md5(F.concat(F.col("val").cast("string"), F.lit("kmv"))), 1, 8),
+        16,
+        10,
+    ).cast("bigint")
+    return c.withColumn("h32", h32)
+
+
+def _kmv_exact_ndv(hashed: DataFrame) -> DataFrame:
+    """(col_name, exact_ndv) over a ``_kmv_hashed`` frame."""
+    return hashed.groupBy("col_name").agg(
+        F.count(F.lit(1)).cast("bigint").alias("exact_ndv")
+    )
+
+
+def _kmv_estimate(sketch: DataFrame, exact: DataFrame) -> DataFrame:
+    """(col_name, k, kth_hash) sketches + exact NDVs -> the estimator
+    rows. A column with fewer distincts than k never fills the sketch
+    (the sketch IS the exact answer there); emit only filled sketches,
+    the same cut the oracle's rank-64 row makes."""
+    return (
+        sketch.join(F.broadcast(exact), "col_name")
+        .filter(F.col("exact_ndv") >= 64)
+        .selectExpr(
+            "col_name",
+            "k",
+            "kth_hash",
+            "63.0 * 4294967296.0 / (CAST(kth_hash AS DOUBLE) + 0.5) AS kmv_est",
+            "exact_ndv",
+            "63.0 * 4294967296.0 / (CAST(kth_hash AS DOUBLE) + 0.5)"
+            " / CAST(exact_ndv AS DOUBLE) AS est_ratio",
+        )
+    )
+
+
 @query("kmv_ndv_estimate",
     _ORACLES["kmv_ndv_estimate"],
     "S-tier catalog statistics: KMV (k-minimum-values) sketch NDV estimate vs exact distinct count per column — deterministic md5 hashing, bottom-64 via TakeOrderedAndProject, estimator one IEEE division of exact integers",
@@ -12547,24 +12509,7 @@ def q_kmv_ndv_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     the bottom-64 cut is TakeOrderedAndProject per column (no global
     sort). Companion of chao1_ndv_estimate — hashing sketch vs
     capture-recapture sampling against the same exact yardstick."""
-    li = _t(spark, sf_dir, "lineitem").select(
-        F.col("l_partkey").cast("bigint").alias("l_partkey"),
-        F.col("l_suppkey").cast("bigint").alias("l_suppkey"),
-        F.col("l_orderkey").cast("bigint").alias("l_orderkey"),
-    )
-    c = li.selectExpr(
-        "stack(3, 'l_partkey', l_partkey, 'l_suppkey', l_suppkey,"
-        " 'l_orderkey', l_orderkey) AS (col_name, val)"
-    ).distinct()
-    h32 = F.conv(
-        F.substring(F.md5(F.concat(F.col("val").cast("string"), F.lit("kmv"))), 1, 8),
-        16,
-        10,
-    ).cast("bigint")
-    hashed = c.withColumn("h32", h32)
-    ex = c.groupBy("col_name").agg(
-        F.count(F.lit(1)).cast("bigint").alias("exact_ndv")
-    )
+    hashed = _kmv_hashed(_t(spark, sf_dir, "lineitem"))
     outs = []
     for col in ("l_partkey", "l_suppkey", "l_orderkey"):
         bottom = (
@@ -12580,22 +12525,7 @@ def q_kmv_ndv_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = outs[0]
     for o in outs[1:]:
         out = out.unionByName(o)
-    # a column with fewer distincts than k never fills the sketch (the
-    # sketch IS the exact answer there); emit only filled sketches, the
-    # same cut the oracle's rank-64 row makes
-    return (
-        out.join(F.broadcast(ex), "col_name")
-        .filter(F.col("exact_ndv") >= 64)
-        .selectExpr(
-            "col_name",
-            "k",
-            "kth_hash",
-            "63.0 * 4294967296.0 / (CAST(kth_hash AS DOUBLE) + 0.5) AS kmv_est",
-            "exact_ndv",
-            "63.0 * 4294967296.0 / (CAST(kth_hash AS DOUBLE) + 0.5)"
-            " / CAST(exact_ndv AS DOUBLE) AS est_ratio",
-        )
-    )
+    return _kmv_estimate(out, _kmv_exact_ndv(hashed))
 
 
 @query("quantized_covariance_topk",
@@ -12757,32 +12687,10 @@ def q_streaming_kmv_sketch_maintain(spark: SparkSession, sf_dir: str) -> DataFra
     over lineitem; read-back dedupes (col, val), re-cuts bottom-64 per
     column, and lands on EXACTLY the batch query's rows (shared
     oracle). The exact-NDV yardstick stays a static full read."""
-    from finance_reporting_etl_spark.streaming.rollup import (
-        streaming_grouped_sum_fold,
-    )
-    from finance_reporting_etl_spark.streaming.staging import run_file_stream
+    from finance_reporting_etl_spark.streaming.staging import replay_partials
 
     def batch_agg(batch: DataFrame) -> DataFrame:
-        c = batch.selectExpr(
-            "CAST(l_partkey AS BIGINT) AS l_partkey",
-            "CAST(l_suppkey AS BIGINT) AS l_suppkey",
-            "CAST(l_orderkey AS BIGINT) AS l_orderkey",
-        ).selectExpr(
-            "stack(3, 'l_partkey', l_partkey, 'l_suppkey', l_suppkey,"
-            " 'l_orderkey', l_orderkey) AS (col_name, val)"
-        ).distinct()
-        hashed = c.withColumn(
-            "h32",
-            F.conv(
-                F.substring(
-                    F.md5(F.concat(F.col("val").cast("string"), F.lit("kmv"))),
-                    1,
-                    8,
-                ),
-                16,
-                10,
-            ).cast("bigint"),
-        )
+        hashed = _kmv_hashed(batch)
         # one window pass over the hashed frame instead of three
         # filter+orderBy+limit legs: each leg re-evaluated the whole
         # stack/distinct/md5 subtree (3x the per-batch compute for
@@ -12811,12 +12719,8 @@ def q_streaming_kmv_sketch_maintain(spark: SparkSession, sf_dir: str) -> DataFra
             .drop("__rn")
         )
 
-    def readback(tmp: str) -> DataFrame:
-        sk = (
-            _read_parquet(spark, f"{tmp}/sink")
-            .select("col_name", "val", "h32")
-            .distinct()
-        )
+    def readback(partials: DataFrame) -> DataFrame:
+        sk = partials.select("col_name", "val", "h32").distinct()
         # same single-pass re-cut as batch_agg: one window rank over
         # the deduped sink instead of three filter+orderBy+limit legs
         # that each re-ran the distinct (identical bottom-64 sets;
@@ -12837,51 +12741,20 @@ def q_streaming_kmv_sketch_maintain(spark: SparkSession, sf_dir: str) -> DataFra
                 "kth_hash",
             )
         )
-        ex = (
-            _t(spark, sf_dir, "lineitem")
-            .selectExpr(
-                "CAST(l_partkey AS BIGINT) AS l_partkey",
-                "CAST(l_suppkey AS BIGINT) AS l_suppkey",
-                "CAST(l_orderkey AS BIGINT) AS l_orderkey",
-            )
-            .selectExpr(
-                "stack(3, 'l_partkey', l_partkey, 'l_suppkey', l_suppkey,"
-                " 'l_orderkey', l_orderkey) AS (col_name, val)"
-            )
-            .distinct()
-            .groupBy("col_name")
-            .agg(F.count(F.lit(1)).cast("bigint").alias("exact_ndv"))
-        )
-        return (
-            out.join(F.broadcast(ex), "col_name")
-            .filter(F.col("exact_ndv") >= 64)
-            .selectExpr(
-                "col_name",
-                "k",
-                "kth_hash",
-                "63.0 * 4294967296.0 / (CAST(kth_hash AS DOUBLE) + 0.5)"
-                " AS kmv_est",
-                "exact_ndv",
-                "63.0 * 4294967296.0 / (CAST(kth_hash AS DOUBLE) + 0.5)"
-                " / CAST(exact_ndv AS DOUBLE) AS est_ratio",
-            )
+        return _kmv_estimate(
+            out, _kmv_exact_ndv(_kmv_hashed(_t(spark, sf_dir, "lineitem")))
         )
 
-    return run_file_stream(
+    return replay_partials(
         spark,
         # stage only the three key columns the sketch folds over
         lambda src: _t(spark, sf_dir, "lineitem")
         .select("l_partkey", "l_suppkey", "l_orderkey")
         .repartition(3)
         .write.parquet(src),
-        lambda src, schema, tmp: streaming_grouped_sum_fold(
-            spark, src, schema,
-            checkpoint_dir=f"{tmp}/ckpt", sink_dir=f"{tmp}/sink",
-            batch_agg=batch_agg,
-        ),
+        batch_agg,
         readback,
-        prefix="stream_kmv_",
-        label="streaming_kmv_sketch_maintain",
+        "streaming_kmv_sketch_maintain",
     )
 
 
@@ -13274,10 +13147,7 @@ def q_streaming_nrr_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     keeps."""
     from pyspark.sql import Window
 
-    from finance_reporting_etl_spark.streaming.rollup import (
-        streaming_grouped_sum_fold,
-    )
-    from finance_reporting_etl_spark.streaming.staging import run_file_stream
+    from finance_reporting_etl_spark.streaming.staging import replay_partials
 
     def batch_agg(batch: DataFrame) -> DataFrame:
         return (
@@ -13288,10 +13158,9 @@ def q_streaming_nrr_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.round(F.sum("value") * 100).cast("bigint").alias("c"))
         )
 
-    def readback(tmp: str) -> DataFrame:
+    def readback(partials: DataFrame) -> DataFrame:
         uw = (
-            _read_parquet(spark, f"{tmp}/sink")
-            .groupBy("user_id", "week")
+            partials.groupBy("user_id", "week")
             .agg(F.sum("c").cast("bigint").alias("cents"))
         )
         mx = uw.agg(F.max("week").alias("maxw"))
@@ -13326,20 +13195,15 @@ def q_streaming_nrr_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    return run_file_stream(
+    return replay_partials(
         spark,
         lambda src: _t(spark, sf_dir, "events")
         .select("user_id", "ts", "event_type", "value")
         .repartition(3)
         .write.parquet(src),
-        lambda src, schema, tmp: streaming_grouped_sum_fold(
-            spark, src, schema,
-            checkpoint_dir=f"{tmp}/ckpt", sink_dir=f"{tmp}/sink",
-            batch_agg=batch_agg,
-        ),
+        batch_agg,
         readback,
-        prefix="stream_nrr_",
-        label="streaming_nrr_monitor",
+        "streaming_nrr_monitor",
     )
 
 
@@ -13882,20 +13746,16 @@ def q_streaming_poisson_alarm(spark: SparkSession, sf_dir: str) -> DataFrame:
     computed once at read-back — bit-identical to the batch chart by
     the shared oracle. The state is one row per active hour, the
     smallest possible alarm memory."""
-    from finance_reporting_etl_spark.streaming.rollup import (
-        streaming_grouped_sum_fold,
-    )
-    from finance_reporting_etl_spark.streaming.staging import run_file_stream
+    from finance_reporting_etl_spark.streaming.staging import replay_partials
 
     def batch_agg(batch: DataFrame) -> DataFrame:
         return batch.groupBy(F.date_trunc("hour", "ts").alias("hour")).agg(
             F.count(F.lit(1)).cast("bigint").alias("c")
         )
 
-    def readback(tmp: str) -> DataFrame:
+    def readback(partials: DataFrame) -> DataFrame:
         h = (
-            _read_parquet(spark, f"{tmp}/sink")
-            .groupBy("hour")
+            partials.groupBy("hour")
             .agg(F.sum("c").cast("bigint").alias("n_events"))
         )
         t = h.agg(
@@ -13917,20 +13777,15 @@ def q_streaming_poisson_alarm(spark: SparkSession, sf_dir: str) -> DataFrame:
             " END AS BIGINT) AS breach_low",
         )
 
-    return run_file_stream(
+    return replay_partials(
         spark,
         lambda src: _t(spark, sf_dir, "events")
         .select("ts")
         .repartition(3)
         .write.parquet(src),
-        lambda src, schema, tmp: streaming_grouped_sum_fold(
-            spark, src, schema,
-            checkpoint_dir=f"{tmp}/ckpt", sink_dir=f"{tmp}/sink",
-            batch_agg=batch_agg,
-        ),
+        batch_agg,
         readback,
-        prefix="stream_cchart_",
-        label="streaming_poisson_alarm",
+        "streaming_poisson_alarm",
     )
 
 
@@ -15669,34 +15524,26 @@ def q_streaming_phash_signature_maintain(spark: SparkSession, sf_dir: str) -> Da
         attach_synthetic_png,
         perceptual_hash_media,
     )
-    from finance_reporting_etl_spark.streaming.rollup import (
-        streaming_grouped_sum_fold,
-    )
-    from finance_reporting_etl_spark.streaming.staging import run_file_stream
+    from finance_reporting_etl_spark.streaming.staging import replay_partials
 
     def batch_agg(batch: DataFrame) -> DataFrame:
         return perceptual_hash_media(attach_synthetic_png(batch))
 
-    def readback(tmp: str) -> DataFrame:
-        sigs = _read_parquet(spark, f"{tmp}/sink").select(
+    def readback(partials: DataFrame) -> DataFrame:
+        sigs = partials.select(
             "doc_id", "width", "height", "hash_lo", "hash_hi"
         )
         return _phash_savings_census(sigs)
 
-    return run_file_stream(
+    return replay_partials(
         spark,
         lambda src: _t(spark, sf_dir, "documents")
         .select("doc_id")
         .repartition(3)
         .write.parquet(src),
-        lambda src, schema, tmp: streaming_grouped_sum_fold(
-            spark, src, schema,
-            checkpoint_dir=f"{tmp}/ckpt", sink_dir=f"{tmp}/sink",
-            batch_agg=batch_agg,
-        ),
+        batch_agg,
         readback,
-        prefix="stream_phash_",
-        label="streaming_phash_signature_maintain",
+        "streaming_phash_signature_maintain",
     )
 
 
@@ -16084,7 +15931,7 @@ def q_streaming_ivf_upsert_reassign(spark: SparkSession, sf_dir: str) -> DataFra
     upsert (associative latest-per-key, any batching reaches the same
     fixpoint), and the maintained state IS the (id, cell) index:
     each micro-batch quantizes ONLY its arriving vectors map-side
-    (``transform=`` hook → ``ivf_cell_expr``, the same fixed-centroid
+    (``ivf_cell_expr`` in the fold step, the same fixed-centroid
     quantizer as a batch rebuild) before the upsert, so nothing
     rescans or re-quantizes old state (VERDICT r12 task 8a; made
     literally true per ADVICE r13 — previously the stream maintained
@@ -16103,8 +15950,9 @@ def q_streaming_ivf_upsert_reassign(spark: SparkSession, sf_dir: str) -> DataFra
         ivf_cell_expr,
         ivf_index,
     )
-    from finance_reporting_etl_spark.streaming.merge import streaming_merge_upsert
+    from finance_reporting_etl_spark.streaming.merge import state_fold
     from finance_reporting_etl_spark.streaming.staging import (
+        fold_stream,
         run_file_stream,
         stage_microbatches,
     )
@@ -16116,6 +15964,16 @@ def q_streaming_ivf_upsert_reassign(spark: SparkSession, sf_dir: str) -> DataFra
         "vec_id", F.reverse("embedding").alias("embedding"),
         F.lit(2).alias("version"),
     )
+
+    def upsert_cells(state, batch: DataFrame) -> DataFrame:
+        # incremental index maintenance: quantize ONLY the arriving
+        # micro-batch (identical fixed-centroid quantizer as a batch
+        # rebuild), drop the embedding before it ever enters the
+        # persisted state
+        cells = batch.select("vec_id", ivf_cell_expr().alias("cell"), "version")
+        combined = cells if state is None else state.unionByName(cells)
+        return merge_latest(combined, ["vec_id"], "version")
+
     streamed_state = run_file_stream(
         spark,
         lambda src: stage_microbatches(
@@ -16126,20 +15984,11 @@ def q_streaming_ivf_upsert_reassign(spark: SparkSession, sf_dir: str) -> DataFra
             ],
             src,
         ),
-        lambda src, schema, tmp: streaming_merge_upsert(
-            spark, src, schema,
-            checkpoint_dir=f"{tmp}/ckpt", target_dir=f"{tmp}/state",
-            keys=["vec_id"], order_col="version",
-            # incremental index maintenance: quantize ONLY the arriving
-            # micro-batch (identical fixed-centroid quantizer as a
-            # batch rebuild), drop the embedding before it ever enters
-            # the persisted state
-            transform=lambda b: b.select(
-                "vec_id", ivf_cell_expr().alias("cell"), "version"
-            ),
+        lambda src, schema, tmp: fold_stream(
+            spark, src, schema, f"{tmp}/ckpt",
+            state_fold(f"{tmp}/state", upsert_cells),
         ),
         lambda tmp: _read_parquet(spark, f"{tmp}/state"),
-        prefix="stream_ivfup_",
         label="streaming_ivf_upsert_reassign",
     )
     stream_index = _persist_aux(
@@ -16339,6 +16188,7 @@ def q_streaming_semdecon_flag_maintain(spark: SparkSession, sf_dir: str) -> Data
         ivf_probes_for,
     )
     from finance_reporting_etl_spark.streaming.staging import (
+        fold_stream,
         run_file_stream,
         stage_microbatches,
     )
@@ -16392,15 +16242,7 @@ def q_streaming_semdecon_flag_maintain(spark: SparkSession, sf_dir: str) -> Data
                 f"{tmp}/flags/batch_id={batch_id}"
             )
 
-        return (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-            .writeStream.foreachBatch(screen)
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
+        return fold_stream(spark, src, schema, f"{tmp}/ckpt", screen)
 
     def readback(tmp):
         idx = _read_parquet(spark, f"{tmp}/index").select("id", "cell")
@@ -16444,7 +16286,6 @@ def q_streaming_semdecon_flag_maintain(spark: SparkSession, sf_dir: str) -> Data
         ),
         start,
         readback,
-        prefix="stream_semdecon_",
         label="streaming_semdecon_flag_maintain",
     )
 
@@ -16877,10 +16718,9 @@ def q_streaming_cluster_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
         jaccard_prep,
         near_dup_clusters,
     )
-    from finance_reporting_etl_spark.streaming.merge import (
-        _read_parquet_if_exists,
-    )
+    from finance_reporting_etl_spark.streaming.merge import state_fold
     from finance_reporting_etl_spark.streaming.staging import (
+        fold_stream,
         run_file_stream,
         stage_microbatches,
     )
@@ -16902,56 +16742,27 @@ def q_streaming_cluster_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
     # outliving the query (VERDICT r14 task 2).
     prepped = jaccard_prep(docs, **kwb).persist()
 
-    def start(src, schema, tmp):
-        state_dir = f"{tmp}/state"
-
-        def merge_batch(batch_df, batch_id):
-            sess = batch_df.sparkSession
-            nodes = batch_df.select(F.col("doc_id").alias("id"))
-            batch_p = prepped.join(
-                nodes.select("id"), "id", "left_semi"
+    def merge_batch(existing, batch_df: DataFrame) -> DataFrame:
+        nodes = batch_df.select(F.col("doc_id").alias("id"))
+        batch_p = prepped.join(nodes.select("id"), "id", "left_semi")
+        if existing is None:
+            return near_dup_clusters(
+                jaccard_pairs_prepped(batch_p, **kw).select("id_a", "id_b"),
+                nodes,
             )
-            existing = _read_parquet_if_exists(sess, state_dir)
-            if existing is None:
-                st = near_dup_clusters(
-                    jaccard_pairs_prepped(batch_p, **kw).select(
-                        "id_a", "id_b"
-                    ),
-                    nodes,
-                )
-            else:
-                # one fused join per micro-batch (cross ∪ batch-self
-                # pairs, value-identical — VERDICT r14 task 4) instead
-                # of separate cross and self joins over the same prep
-                seen = (
-                    existing.select("id")
-                    .withColumn("__isb", F.lit(0))
-                    .unionByName(
-                        nodes.select("id").withColumn("__isb", F.lit(1))
-                    )
-                )
-                seen_p = prepped.join(seen, "id")
-                edges = jaccard_incident_pairs_prepped(
-                    batch_p, seen_p, "__isb", **kw
-                ).select("id_a", "id_b")
-                st = incremental_clusters(existing, edges, nodes)
-            # write-then-swap replaces the old checkpoint-then-
-            # overwrite: one materialization of the state per batch
-            from finance_reporting_etl_spark.streaming.merge import (
-                overwrite_state_dir,
-            )
-
-            overwrite_state_dir(st, state_dir)
-
-        return (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-            .writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .trigger(availableNow=True)
-            .start()
+        # one fused join per micro-batch (cross ∪ batch-self pairs,
+        # value-identical — VERDICT r14 task 4) instead of separate
+        # cross and self joins over the same prep
+        seen = (
+            existing.select("id")
+            .withColumn("__isb", F.lit(0))
+            .unionByName(nodes.select("id").withColumn("__isb", F.lit(1)))
         )
+        seen_p = prepped.join(seen, "id")
+        edges = jaccard_incident_pairs_prepped(
+            batch_p, seen_p, "__isb", **kw
+        ).select("id_a", "id_b")
+        return incremental_clusters(existing, edges, nodes)
 
     state = run_file_stream(
         spark,
@@ -16963,9 +16774,11 @@ def q_streaming_cluster_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
             ],
             src,
         ),
-        start,
+        lambda src, schema, tmp: fold_stream(
+            spark, src, schema, f"{tmp}/ckpt",
+            state_fold(f"{tmp}/state", merge_batch),
+        ),
         lambda tmp: _read_parquet(spark, f"{tmp}/state"),
-        prefix="stream_clmaint_",
         label="streaming_cluster_maintain",
     )
     prepped.unpersist()

@@ -126,8 +126,7 @@ def replay_interval_join(spark, events, how: str):
             how=how,
         ),
         lambda tmp: _read_parquet(spark, f"{tmp}/out"),
-        prefix="stream_join_",
-        label=f"streaming {how} interval join",
+        label=f"streaming_{how}_interval_join",
         infer_schema=False,  # src holds views/ + purchases/ subdirs
     )
 

@@ -2,7 +2,9 @@
 
 ``foreachBatch`` is the Structured Streaming escape hatch for sinks
 Spark has no native connector for — each micro-batch arrives as a plain
-DataFrame and arbitrary batch logic runs against it. Here that logic is
+DataFrame and arbitrary batch logic runs against it. ``state_fold``
+is that logic for state kept in one parquet dir (read it, fold the
+batch in, swap the result in); ``streaming_merge_upsert`` folds with
 the engine's own ``merge_latest`` upsert, turning an event stream into
 a continuously-maintained latest-row-per-key table.
 
@@ -28,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from finance_reporting_etl_spark.operators.incremental import merge_latest
+from finance_reporting_etl_spark.streaming.staging import fold_stream
 from finance_reporting_etl_spark.tables import _read_parquet
 
 
@@ -104,6 +107,19 @@ def _read_parquet_if_exists(sess, path: str):
     return _read_parquet(sess, path)
 
 
+def state_fold(state_dir: str, step):
+    """The foreachBatch body for state kept in one parquet dir: read
+    the state (None before the first batch; a state a crash left
+    aside is restored first), fold the batch into it with
+    ``step(state, batch)`` and swap the result in."""
+
+    def fold(batch: DataFrame, batch_id: int) -> None:
+        state = _read_parquet_if_exists(batch.sparkSession, state_dir)
+        overwrite_state_dir(step(state, batch), state_dir)
+
+    return fold
+
+
 def streaming_merge_upsert(
     spark: SparkSession,
     source_dir: str,
@@ -113,103 +129,15 @@ def streaming_merge_upsert(
     keys: list[str],
     order_col: str,
     tiebreak_col: str | None = None,
-    max_files_per_trigger: int = 1,
-    transform=None,
 ):
     """AvailableNow file stream -> foreachBatch merge_latest upsert into
     ``target_dir``. Returns the StreamingQuery; caller awaits
-    termination then reads the target parquet.
+    termination then reads the target parquet."""
 
-    ``transform`` (optional, batch DataFrame -> DataFrame) runs on each
-    arriving micro-batch BEFORE the merge — the hook for maintaining a
-    DERIVED state (e.g. quantizing arriving vectors to IVF cells) so
-    only new rows ever pay the derivation; the persisted state holds
-    the transformed schema, old rows are never re-derived."""
+    def upsert(state: DataFrame | None, batch: DataFrame) -> DataFrame:
+        combined = batch if state is None else state.unionByName(batch)
+        return merge_latest(combined, keys, order_col, tiebreak_col)
 
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        sess = batch_df.sparkSession
-        if transform is not None:
-            batch_df = transform(batch_df)
-        existing = _read_parquet_if_exists(sess, target_dir)
-        combined = (
-            batch_df if existing is None else existing.unionByName(batch_df)
-        )
-        merged = merge_latest(combined, keys, order_col, tiebreak_col)
-        # write-then-swap: one materialization per batch (the old
-        # localCheckpoint-before-overwrite wrote the state twice)
-        overwrite_state_dir(merged, target_dir)
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_dir)
-    )
-    return (
-        stream.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def streaming_cms_maintain(
-    spark: SparkSession,
-    source_dir: str,
-    schema: T.StructType,
-    checkpoint_dir: str,
-    sketch_dir: str,
-    placements: DataFrame,
-    token_expr,
-    max_files_per_trigger: int = 1,
-):
-    """AvailableNow file stream -> foreachBatch cell-wise Count-Min
-    sketch maintenance: each micro-batch's token counts fold into the
-    persisted (d, col, cell_cnt) grid by addition.
-
-    This is the sketch's mergeability doing real work: the maintained
-    state is depth*width rows FOREVER — unlike the upsert demo above,
-    the per-batch rewrite cost is constant, so plain parquet is the
-    honest production shape, not a stand-in. Any batch split reaches
-    the same grid (addition is associative+commutative), which is what
-    the oracle checks: a streamed sketch must equal the one-shot batch
-    sketch over the union.
-
-    ``token_expr`` maps a batch DataFrame to one token per row (col
-    name 'token'); ``placements`` is the (token, d, col) table from
-    ``cms_placements`` (broadcast per batch — vocab x depth rows).
-
-    foreachBatch is at-least-once, so each batch writes its own DELTA
-    to a ``batch_id=...`` partition of ``sketch_dir`` (a retried batch
-    overwrites itself instead of double-counting — the same
-    idempotency fix streaming/drift.py carries); consumers merge with
-    ``groupBy(d, col).sum(cell_cnt)``, which is exactly the sketch's
-    mergeability. The earlier read-add-overwrite fold double-counted
-    replayed batches (r5 review).
-    """
-    from pyspark.sql import functions as F
-
-    from finance_reporting_etl_spark.operators.sketches import cms_cell_counts
-
-    def fold_batch(batch_df: DataFrame, batch_id: int) -> None:
-        sess = batch_df.sparkSession
-        tc = (
-            batch_df.select(token_expr.alias("token"))
-            .groupBy("token")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-        )
-        delta = cms_cell_counts(tc, F.broadcast(placements))
-        delta.write.mode("overwrite").parquet(
-            f"{sketch_dir}/batch_id={batch_id}"
-        )
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_dir)
-    )
-    return (
-        stream.writeStream.foreachBatch(fold_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return fold_stream(
+        spark, source_dir, schema, checkpoint_dir, state_fold(target_dir, upsert)
     )

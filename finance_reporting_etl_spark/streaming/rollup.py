@@ -262,52 +262,28 @@ def streaming_sessionize(
     )
 
 
-def streaming_ohlc_maintain(
-    spark: SparkSession,
-    source_dir: str,
-    schema: T.StructType,
-    checkpoint_dir: str,
-    bars_dir: str,
-    max_files_per_trigger: int = 1,
-):
-    """Maintain daily OHLC bars from an event stream: each micro-batch
-    writes its PARTIAL bars — (first event key, open, last event key,
-    close, high, low, n) per (event_type, day) — to a ``batch_id=...``
-    partition of ``bars_dir`` (at-least-once foreachBatch: a retried
-    batch overwrites itself, the same idempotency shape
-    streaming_cms_maintain and streaming/drift.py carry). OHLC is a
-    MERGEABLE aggregate once open/close carry their (ts, event_id)
-    keys, so consumers reduce partials with min_by/max_by + min/max +
-    sum — see ``merge_ohlc_partials``."""
-
-    def fold(batch: DataFrame, batch_id: int) -> None:
-        e = batch.filter(F.col("value").isNotNull()).select(
-            "event_type",
-            F.col("ts").cast("date").alias("day"),
-            "ts",
-            "event_id",
-            F.round(F.col("value") * 100).cast("bigint").alias("cents"),
-        )
-        k = F.struct(F.col("ts"), F.col("event_id"))
-        partial = e.groupBy("event_type", "day").agg(
-            F.min(k).alias("first_k"),
-            F.min_by("cents", k).alias("open_cents"),
-            F.max(k).alias("last_k"),
-            F.max_by("cents", k).alias("close_cents"),
-            F.max("cents").alias("high_cents"),
-            F.min("cents").alias("low_cents"),
-            F.count(F.lit(1)).alias("n_ticks"),
-        )
-        partial.write.mode("overwrite").parquet(f"{bars_dir}/batch_id={batch_id}")
-
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_dir)
-        .writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+def ohlc_partials(batch: DataFrame) -> DataFrame:
+    """One micro-batch's PARTIAL daily OHLC bars: (first event key,
+    open, last event key, close, high, low, n) per (event_type, day).
+    OHLC is a MERGEABLE aggregate once open/close carry their
+    (ts, event_id) keys, so partials reduce with min_by/max_by +
+    min/max + sum — see ``merge_ohlc_partials``."""
+    e = batch.filter(F.col("value").isNotNull()).select(
+        "event_type",
+        F.col("ts").cast("date").alias("day"),
+        "ts",
+        "event_id",
+        F.round(F.col("value") * 100).cast("bigint").alias("cents"),
+    )
+    k = F.struct(F.col("ts"), F.col("event_id"))
+    return e.groupBy("event_type", "day").agg(
+        F.min(k).alias("first_k"),
+        F.min_by("cents", k).alias("open_cents"),
+        F.max(k).alias("last_k"),
+        F.max_by("cents", k).alias("close_cents"),
+        F.max("cents").alias("high_cents"),
+        F.min("cents").alias("low_cents"),
+        F.count(F.lit(1)).alias("n_ticks"),
     )
 
 
@@ -322,38 +298,4 @@ def merge_ohlc_partials(partials: DataFrame) -> DataFrame:
         F.min("low_cents").alias("low_cents"),
         F.max_by("close_cents", "last_k").alias("close_cents"),
         F.sum("n_ticks").alias("n_ticks"),
-    )
-
-
-def streaming_grouped_sum_fold(
-    spark,
-    source_dir: str,
-    schema,
-    checkpoint_dir: str,
-    sink_dir: str,
-    batch_agg,
-    max_files_per_trigger: int = 1,
-):
-    """Start an AvailableNow stream folding each micro-batch through
-    ``batch_agg`` (a callable batch_df -> per-group ADDITIVE partial
-    sums) into a batch_id-partitioned parquet sink — the generic form
-    of streaming_bin_count_fold for any mergeable integer rollup
-    (ledger postings, leg counts, token tallies). The reader merges
-    partials with ONE groupBy-sum; because the partials are exact
-    integers, the merged result is bit-identical to the one-shot batch
-    aggregation regardless of micro-batch boundaries."""
-
-    def fold(batch, batch_id):
-        batch_agg(batch).write.mode("overwrite").parquet(
-            f"{sink_dir}/batch_id={batch_id}"
-        )
-
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
-        .parquet(source_dir)
-        .writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
     )

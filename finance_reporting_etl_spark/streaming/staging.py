@@ -5,8 +5,7 @@ modification time. Every streaming catalog query replays a bounded
 fixture through a real stream (`Trigger.AvailableNow` +
 `maxFilesPerTrigger`), so correctness of watermark eviction, state
 timeout and append emission depends on a reproducible arrival order.
-These helpers centralize that plumbing (it was copy-pasted per query
-before round 5):
+These helpers hold that plumbing:
 
 - :func:`stage_microbatches` writes each batch DataFrame as ONE
   parquet file with a fixed, strictly increasing mtime — the replay
@@ -16,6 +15,13 @@ before round 5):
   would leave a partially-populated sink — fail loudly instead of
   returning a wrong answer), snapshot the result off the sink with
   ``localCheckpoint`` so it survives the tempdir cleanup.
+- :func:`fold_stream` is the one ``foreachBatch`` start: an
+  AvailableNow stream, one source file per micro-batch, each batch
+  handed to a fold function.
+- :func:`replay_partials` is :func:`run_file_stream` plus
+  :func:`fold_stream` for folds that write one partial per batch and
+  merge the partials at read-back (the other fold shape, state
+  rewritten per batch, is ``merge.state_fold``).
 - :func:`stage_chronological_streams` stages the events fixture as
   per-event-type 2-file chronological sources with an EMPTY epilogue
   file, the shape stream-stream outer joins need (the epilogue forces
@@ -106,13 +112,13 @@ def run_file_stream(
     write_source: Callable[[str], None],
     start_stream: Callable[[str, object, str], object],
     read_result: Callable[[str], DataFrame],
-    prefix: str = "stream_",
     timeout: int = 300,
     label: str = "stream",
     infer_schema: bool = True,
 ) -> DataFrame:
-    """Full replay lifecycle around a tempdir: ``write_source(src)``
-    stages the input files, ``start_stream(src, schema, tmp)`` returns
+    """Full replay lifecycle around a tempdir named after ``label``:
+    ``write_source(src)`` stages the input files,
+    ``start_stream(src, schema, tmp)`` returns
     the StreamingQuery (checkpoint/output paths live under ``tmp``),
     ``read_result(tmp)`` reads the sink. The result is snapshotted
     with ``localCheckpoint(eager=True)`` before the tempdir is
@@ -120,7 +126,7 @@ def run_file_stream(
     SUBdirectories (multi-source replays) — the parent has no single
     schema; ``start_stream`` then receives None and derives
     schemas from its own subdirs."""
-    tmp = tempfile.mkdtemp(prefix=prefix)
+    tmp = tempfile.mkdtemp(prefix=f"{label}_")
     try:
         src = f"{tmp}/src"
         write_source(src)
@@ -133,6 +139,67 @@ def run_file_stream(
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
     return out
+
+
+# one source file per micro-batch: the staged files are the batches
+FILES_PER_TRIGGER = 1
+
+
+def fold_stream(
+    spark: SparkSession,
+    src: str,
+    schema,
+    checkpoint_dir: str,
+    fold: Callable[[DataFrame, int], None],
+):
+    """Start an AvailableNow file stream over ``src`` that calls
+    ``fold(batch, batch_id)`` on each micro-batch through
+    ``foreachBatch``; returns the StreamingQuery."""
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", FILES_PER_TRIGGER)
+        .parquet(src)
+        .writeStream.foreachBatch(fold)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
+def replay_partials(
+    spark: SparkSession,
+    write_source: Callable[[str], None],
+    batch_agg: Callable[[DataFrame], DataFrame],
+    merge: Callable[[DataFrame], DataFrame],
+    label: str,
+) -> DataFrame:
+    """Replay the source ``write_source(src)`` stages as micro-batches:
+    each batch writes ``batch_agg(batch)`` to its own
+    ``sink/batch_id=<id>`` partition, and the result is
+    ``merge(partials)`` over the whole sink.
+
+    foreachBatch is at-least-once: a retried micro-batch runs again
+    under the same batch_id, so it overwrites its own partition instead
+    of adding a second partial. The merge sees each batch once, and a
+    mergeable aggregate (integer sums, min/max by a unique key, bottom-k
+    sets) lands on the one-shot answer wherever the batch boundaries
+    fall."""
+
+    def start(src: str, schema, tmp: str):
+        def fold(batch: DataFrame, batch_id: int) -> None:
+            batch_agg(batch).write.mode("overwrite").parquet(
+                f"{tmp}/sink/batch_id={batch_id}"
+            )
+
+        return fold_stream(spark, src, schema, f"{tmp}/ckpt", fold)
+
+    return run_file_stream(
+        spark,
+        write_source,
+        start,
+        lambda tmp: merge(_read_parquet(spark, f"{tmp}/sink")),
+        label=label,
+    )
 
 
 def stage_chronological_streams(

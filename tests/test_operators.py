@@ -2436,39 +2436,28 @@ def test_ohlc_partial_merge_invariant_under_batch_split(spark, sf_dir):
     ANY batch split (mergeability is what the streaming maintenance
     relies on) — checked for two different splits."""
     from finance_reporting_etl_spark.operators.timeseries import ohlc_bars
-    from finance_reporting_etl_spark.streaming.rollup import merge_ohlc_partials
+    from finance_reporting_etl_spark.streaming.rollup import (
+        merge_ohlc_partials,
+        ohlc_partials,
+    )
     from finance_reporting_etl_spark.tables import _read_parquet
 
-    e = (
-        _read_parquet(spark, f"{sf_dir}/events.parquet")
-        .filter(F.col("value").isNotNull())
-        .select(
-            "event_type",
-            F.col("ts").cast("date").alias("day"),
-            "ts",
-            "event_id",
-            F.round(F.col("value") * 100).cast("bigint").alias("cents"),
-        )
+    ev = _read_parquet(spark, f"{sf_dir}/events.parquet")
+    e = ev.filter(F.col("value").isNotNull()).select(
+        "event_type",
+        F.col("ts").cast("date").alias("day"),
+        "ts",
+        "event_id",
+        F.round(F.col("value") * 100).cast("bigint").alias("cents"),
     )
     direct = sorted(
         map(tuple, ohlc_bars(e, ["event_type", "day"], "ts", "event_id", "cents").collect())
     )
-    k = F.struct(F.col("ts"), F.col("event_id"))
     for mod in (2, 5):
-        partials = []
-        for i in range(mod):
-            b = e.filter(F.col("event_id") % mod == i)
-            partials.append(
-                b.groupBy("event_type", "day").agg(
-                    F.min(k).alias("first_k"),
-                    F.min_by("cents", k).alias("open_cents"),
-                    F.max(k).alias("last_k"),
-                    F.max_by("cents", k).alias("close_cents"),
-                    F.max("cents").alias("high_cents"),
-                    F.min("cents").alias("low_cents"),
-                    F.count(F.lit(1)).alias("n_ticks"),
-                )
-            )
+        partials = [
+            ohlc_partials(ev.filter(F.col("event_id") % mod == i))
+            for i in range(mod)
+        ]
         allp = partials[0]
         for p in partials[1:]:
             allp = allp.unionByName(p)
