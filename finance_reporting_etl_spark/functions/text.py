@@ -168,29 +168,6 @@ def ngrams_from_tokens(toks: Column | str, n: int) -> Column:
     return F.when(F.size(toks) >= n, grams).otherwise(F.array().cast("array<string>"))
 
 
-def token_ngrams(text: Column | str, n: int) -> Column:
-    """Token n-grams of lowercased text. Convenience form for one-shot
-    use; hot paths should project ``whitespace_tokens`` to a column
-    first and call ``ngrams_from_tokens`` (see its docstring)."""
-    return ngrams_from_tokens(whitespace_tokens(F.lower(_c(text))), n)
-
-
-def top_ngram_fraction(text: Column | str, n: int = 2, scale: int = 4) -> Column:
-    """Fraction of a document's token n-grams accounted for by its single
-    most frequent n-gram — the Gopher-style 'top n-gram' repetition
-    signal. Computed per-row with array lambdas (O(k^2) in distinct
-    grams): right for ~1k-token web documents; for book-length inputs use
-    the explode + groupBy formulation instead so the work distributes."""
-    grams = token_ngrams(text, n)
-    top = F.array_max(
-        F.transform(
-            F.array_distinct(grams),
-            lambda x: F.size(F.filter(grams, lambda y: y == x)),
-        )
-    )
-    return det_round(top / F.nullif(F.size(grams).cast("double"), F.lit(0.0)), scale)
-
-
 # --- PII redaction ---------------------------------------------------------
 
 # Patterns restricted to syntax Java regex and RE2 (DuckDB) interpret

@@ -18,7 +18,8 @@ Cost is ONE shuffle on the join key + a per-key sort — the same price
 as a regular sort-merge join — versus the O(|left| x |right-per-key|)
 blowup of the naive ``l.ts >= r.ts`` theta-join that a range condition
 plans as. Backward direction, inclusive (ties: right row at exactly
-ts is visible), matching DuckDB's ``ASOF JOIN`` used as the oracle.
+ts is visible), matching DuckDB's ``ASOF JOIN`` used as the oracle;
+the forward direction (strict) is the same window run in reverse.
 """
 
 from __future__ import annotations
@@ -36,14 +37,31 @@ def asof_join(
     right_cols: list[str] | None = None,
     suffix: str = "_r",
     tiebreak: str | None = None,
+    direction: str = "backward",
 ) -> DataFrame:
-    """Backward inclusive as-of join (left rows keep NULLs when no prior
-    right row exists — left-outer semantics).
+    """As-of join, left-outer (left rows keep NULLs when no right row
+    qualifies).
+
+    - ``direction="backward"``: for each left row at t, the LATEST
+      right row with ts <= t (inclusive); among equal-ts rights the
+      highest ``tiebreak`` wins.
+    - ``direction="forward"``: the EARLIEST right row with ts > t
+      (strict) — the label-generation direction (time-to-next-event
+      targets: next purchase after a view); among equal-ts rights the
+      lowest ``tiebreak`` wins.
+
+    Both are one window over the union, carrying the last right row
+    seen: ordered by ts ASC (lefts after same-ts rights, so the match
+    is inclusive) or by ts DESC (lefts before same-ts rights, so it is
+    strict; scanning backward in time, the last right seen is the
+    nearest following one).
 
     ``right_cols`` limits the attached payload (column pruning through
     the union); ``tiebreak`` orders right rows that share a timestamp
-    (latest-by-tiebreak wins) for deterministic results.
+    for deterministic results.
     """
+    if direction not in ("backward", "forward"):
+        raise ValueError(f"direction must be 'backward' or 'forward', got {direction!r}")
     # `is None` check: an explicit empty list means 'attach only the
     # right timestamp' — a falsy-`or` would silently expand it to the
     # full right payload (r5 review)
@@ -74,9 +92,10 @@ def asof_join(
         *[F.col(c) for c in left.columns if c not in on],
     )
     u = r.unionByName(l)
+    order = [F.col("__ts"), F.col("__is_left"), F.col("__tb")]
     w = (
         Window.partitionBy(*on)
-        .orderBy(F.col("__ts").asc(), F.col("__is_left").asc(), F.col("__tb").asc())
+        .orderBy(*[c.asc() if direction == "backward" else c.desc() for c in order])
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     carried = u.withColumn("__last_r", F.last("__r", ignorenulls=True).over(w))
@@ -85,79 +104,6 @@ def asof_join(
         *on,
         *out_left,
         *[F.col(f"__last_r.{f}") for f in carried.schema["__last_r"].dataType.fieldNames()],
-    )
-
-
-def asof_join_forward(
-    left: DataFrame,
-    right: DataFrame,
-    on: list[str],
-    left_ts: str = "ts",
-    right_ts: str = "ts",
-    right_cols: list[str] | None = None,
-    suffix: str = "_r",
-    tiebreak: str | None = None,
-) -> DataFrame:
-    """Forward STRICT as-of: for each left row at t, the EARLIEST right
-    row with ts > t (same key) — the label-generation direction
-    (time-to-next-event targets: next purchase after a view, next
-    failure after a reading). Left-outer: no following row -> NULLs.
-
-    Mirror of ``asof_join``: same union + one window, ordered by ts
-    DESC with lefts sorting before same-ts rights (strict >), carrying
-    the last right seen — which, scanning backward in time, is the
-    nearest following row. Same single-shuffle cost; deterministic via
-    ``tiebreak`` DESC so the lowest tiebreak wins among equal-ts rights.
-    """
-    # `is None` check: an explicit empty list means 'attach only the
-    # right timestamp' — a falsy-`or` would silently expand it to the
-    # full right payload (r5 review)
-    right_cols = (
-        [c for c in right.columns if c not in (*on, right_ts)]
-        if right_cols is None
-        else list(right_cols)
-    )
-    payload = F.struct(
-        F.col(right_ts).alias(f"{right_ts}{suffix}"),
-        *[F.col(c).alias(f"{c}{suffix}") for c in right_cols],
-    )
-    tb = F.col(tiebreak) if tiebreak else F.lit(0)
-    r = right.select(
-        *[F.col(c) for c in on],
-        F.col(right_ts).alias("__ts"),
-        F.lit(0).alias("__is_left"),
-        tb.alias("__tb"),
-        payload.alias("__r"),
-        *[
-            F.lit(None).cast(left.schema[c].dataType).alias(c)
-            for c in left.columns
-            if c not in on
-        ],
-    )
-    l = left.select(
-        *[F.col(c) for c in on],
-        F.col(left_ts).alias("__ts"),
-        F.lit(1).alias("__is_left"),
-        F.lit(0).alias("__tb"),
-        F.lit(None).cast(r.schema["__r"].dataType).alias("__r"),
-        *[F.col(c) for c in left.columns if c not in on],
-    )
-    u = r.unionByName(l)
-    w = (
-        Window.partitionBy(*on)
-        # ts DESC; at equal ts the left row (1) sorts first, so a
-        # same-instant right row is NOT visible (strict >); among
-        # equal-ts rights, __tb DESC makes the lowest tiebreak the one
-        # carried forward
-        .orderBy(F.col("__ts").desc(), F.col("__is_left").desc(), F.col("__tb").desc())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    carried = u.withColumn("__next_r", F.last("__r", ignorenulls=True).over(w))
-    out_left = [c for c in left.columns if c not in on]
-    return carried.filter(F.col("__is_left") == 1).select(
-        *on,
-        *out_left,
-        *[F.col(f"__next_r.{f}") for f in carried.schema["__next_r"].dataType.fieldNames()],
     )
 
 

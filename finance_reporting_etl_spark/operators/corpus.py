@@ -222,11 +222,11 @@ def repetition_profile(
 
     Distributed formulation: explode n-grams -> count per (doc, gram) ->
     max per doc, then join back onto the scalar metrics. This is the
-    scale-correct shape — the naive column-expression version
-    (``text.top_ngram_fraction``) nests a filter lambda inside a
-    transform, and Catalyst re-evaluates the whole gram-construction
-    subtree per outer element (no CSE through higher-order functions):
-    measured 235s vs ~1s at sf0.1 for identical output. Shuffle keys
+    scale-correct shape. A per-row column expression (a filter lambda
+    counting each distinct gram, nested inside a transform) makes
+    Catalyst re-evaluate the whole gram-construction subtree per outer
+    element (no CSE through higher-order functions): measured 235s vs
+    ~1s at sf0.1 for identical output. Shuffle keys
     (doc_id, gram) are near-unique -> uniform; partial aggregation
     collapses repeats map-side.
     """

@@ -173,35 +173,19 @@ def jaccard_prep(
     ).withColumn("n_toks", F.size("toks"))
 
 
-def jaccard_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    block_cols: tuple[str, ...] = (),
-    threshold: float = 0.5,
-    scale: int = 4,
-) -> DataFrame:
-    """Exact token-set Jaccard over blocked pairs (X2 verify step).
-
-    ``block_cols`` restricts the pair space (e.g. same lang) — the
-    blocking pattern that keeps exact verification feasible at scale.
-    """
-    return jaccard_pairs_prepped(
-        jaccard_prep(df, id_col, text_col, block_cols),
-        block_cols=block_cols,
-        threshold=threshold,
-        scale=scale,
-    )
-
-
 def jaccard_pairs_prepped(
     toks: DataFrame,
     block_cols: tuple[str, ...] = (),
     threshold: float = 0.5,
     scale: int = 4,
 ) -> DataFrame:
-    """:func:`jaccard_pairs` over an already-tokenized
-    :func:`jaccard_prep` frame (identical pair set and values)."""
+    """Exact token-set Jaccard over blocked pairs of a
+    :func:`jaccard_prep` frame (X2 verify step): (id_a, id_b, jaccard)
+    with id_a < id_b and jaccard >= ``threshold``.
+
+    ``block_cols`` restricts the pair space (e.g. same lang) — the
+    blocking pattern that keeps exact verification feasible at scale.
+    """
     a, b = toks.alias("a"), toks.alias("b")
     cond = F.col("a.id") < F.col("b.id")
     for c in block_cols:
@@ -289,7 +273,7 @@ def jaccard_prefix_filter_pairs(
             b,
             (F.col("a.tok") == F.col("b.tok"))
             & (F.col("a.id") < F.col("b.id"))
-            # lossless size prefilter (same bound jaccard_pairs uses)
+            # lossless size prefilter (same bound jaccard_pairs_prepped uses)
             & (F.col("b.n") >= F.ceil(F.col("a.n") * F.lit(threshold)))
             & (F.col("a.n") >= F.ceil(F.col("b.n") * F.lit(threshold))),
         )
@@ -383,57 +367,6 @@ def containment_prefix_filter_pairs(
     )
 
 
-def minhash_near_dup_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    threshold: float = 0.5,
-    num_hashes: int = 32,
-    bands: int = 8,
-    shingle_n: int = 3,
-) -> DataFrame:
-    """Full MinHash-LSH near-dup: LSH candidates -> exact shingle-set
-    Jaccard verify. Deterministic (fixed hash seeds, exact verify).
-
-    The distinct shingle-hash set rides along from minhash_signatures
-    through the banding explode and the bucket self-join, so the verify
-    step needs no extra joins back to the documents table (1 shuffle
-    join vs 3). Trade-off: the banding shuffle carries the shingle
-    arrays (bands x wider rows); if shuffle bandwidth ever dominates,
-    banding bare ids and rejoining the shingle sets after the pair
-    dedup is the narrow-row alternative — measured equal at bench scale.
-    """
-    banded = minhash_banded_sigs(df, id_col, text_col, num_hashes, bands, shingle_n)
-    return minhash_pairs_from_banded(banded, threshold)
-
-
-def minhash_banded_sigs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_hashes: int = 32,
-    bands: int = 8,
-    shingle_n: int = 3,
-) -> DataFrame:
-    """(id, sh, band_idx, band_hash) rows — the persistable LSH index
-    carrying the shingle-hash set for the verify step. Persisting this
-    lets an independent engine re-derive the banding join, pair dedup
-    and Jaccard verify from identical inputs (the DuckDB oracle does)."""
-    sig = minhash_signatures(df, id_col, text_col, num_hashes, shingle_n)
-    return sig.select(
-        "id",
-        "sh",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(b).alias("band_idx"), bh.alias("band_hash"))
-                    for b, bh in enumerate(band_hashes(num_hashes, bands))
-                ]
-            )
-        ).alias("band"),
-    ).select("id", "sh", F.col("band.band_idx").alias("band_idx"), F.col("band.band_hash").alias("band_hash"))
-
-
 def minhash_index(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -459,39 +392,16 @@ def minhash_index(
     )
 
 
-def minhash_pairs_from_banded(banded: DataFrame, threshold: float = 0.5) -> DataFrame:
-    """Banding self-join -> pair dedup -> exact shingle-set Jaccard.
-
-    The shingle set rides the banding join (1 shuffle join total); for
-    the persisted/narrow-row variant use ``minhash_pairs_from_bands``.
-    """
-    a, b = banded.alias("a"), banded.alias("b")
-    cands = (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            F.col("a.sh").alias("sa"),
-            F.col("b.sh").alias("sb"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    return _jaccard_verify(cands, threshold)
-
-
 def minhash_pairs_from_bands(
     bands: DataFrame, sigs: DataFrame, threshold: float = 0.5
 ) -> DataFrame:
-    """Narrow-row variant: candidate pairs from a bare (id, band_idx,
-    band_hash) index, shingle sets joined back onto the DEDUPED pairs
-    only. The right shape when the band index is persisted (8x less
-    write than carrying the set per band row) and at 100 TB, where the
-    banding shuffle should move 24-byte rows, not shingle arrays."""
+    """MinHash-LSH pairs: banding self-join over a bare (id, band_idx,
+    band_hash) index -> pair dedup -> exact shingle-set Jaccard verify,
+    with the shingle sets (``sigs``: id, sh) joined back onto the
+    DEDUPED pairs only. The band index is persisted 8x narrower than
+    one carrying the set per band row, and at 100 TB the banding
+    shuffle moves 24-byte rows, not shingle arrays. Deterministic
+    (fixed hash seeds, exact verify)."""
     a, b = bands.alias("a"), bands.alias("b")
     pairs = (
         a.join(
@@ -731,25 +641,6 @@ def simhash(df: DataFrame, id_col: str = "doc_id", text_col: str = "text", bits:
     ).withColumn("h", F.xxhash64("tok"))
     lists = toks.groupBy("id").agg(F.collect_list("h").alias("hs"))
     return lists.select("id", sim_vote("hs").alias("simhash"))
-
-
-def simhash_near_dup_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_hamming: int = 3,
-) -> DataFrame:
-    """Near-dup pairs with hamming(simhash) <= max_hamming.
-
-    Pigeonhole blocking: with 4 16-bit chunks, any pair within hamming 3
-    shares at least one exact chunk. Chunks are EXPLODED to (chunk_idx,
-    chunk_val) rows and self-joined once on that composite key — one
-    shuffle over 4n rows instead of four separate full-table joins +
-    union (the previous shape; 4 shuffles of n rows each plus a union
-    distinct). Exact hamming verify via bit_count(xor) after dedup.
-    """
-    sh = simhash(df, id_col, text_col)
-    return simhash_pairs_from_sigs(sh, max_hamming)
 
 
 def simhash_pairs_from_sigs(sh: DataFrame, max_hamming: int = 3) -> DataFrame:
@@ -1302,82 +1193,6 @@ def lsh_band_sweep(
     )
 
 
-def jaccard_cross_pairs(
-    delta: DataFrame,
-    base: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    block_cols: tuple[str, ...] = (),
-    threshold: float = 0.5,
-    scale: int = 4,
-) -> DataFrame:
-    """CROSS-set variant of :func:`jaccard_pairs` for incremental
-    maintenance: exact token-set Jaccard pairs with the DELTA side on
-    the left and the BASE side on the right — the candidate shape
-    where an arriving batch is scored against the standing corpus
-    without ever recomputing a base-base pair (the
-    near_dup_incremental_batch idiom, exact-Jaccard flavored).
-
-    Inputs must be DISJOINT id sets (a split of one corpus); there is
-    no ``id <`` orientation because sidedness already makes each
-    unordered pair appear exactly once. Identical blocking + lossless
-    size prefilter + det-rounded Jaccard as :func:`jaccard_pairs`, so
-    (cross pairs) ∪ (delta-delta pairs via jaccard_pairs) ∪ (base-base
-    pairs) is exactly the full pair set — the partition the
-    incremental == batch equivalence rests on."""
-
-    return jaccard_cross_pairs_prepped(
-        jaccard_prep(delta, id_col, text_col, block_cols),
-        jaccard_prep(base, id_col, text_col, block_cols),
-        block_cols=block_cols,
-        threshold=threshold,
-        scale=scale,
-    )
-
-
-def jaccard_cross_pairs_prepped(
-    delta_toks: DataFrame,
-    base_toks: DataFrame,
-    block_cols: tuple[str, ...] = (),
-    threshold: float = 0.5,
-    scale: int = 4,
-) -> DataFrame:
-    """:func:`jaccard_cross_pairs` over already-tokenized
-    :func:`jaccard_prep` frames (identical pair set and values)."""
-
-    def _tag(df: DataFrame, tag: str):
-        return df.select(
-            F.col("id").alias(f"id_{tag}"),
-            *[F.col(c).alias(f"{c}_{tag}") for c in block_cols],
-            F.col("toks").alias(f"toks_{tag}"),
-            F.col("n_toks").alias(f"n_toks_{tag}"),
-        )
-
-    a, b = _tag(delta_toks, "a"), _tag(base_toks, "b")
-    cond = F.lit(True)
-    for c in block_cols:
-        cond = cond & (F.col(f"{c}_a") == F.col(f"{c}_b"))
-    cond = (
-        cond
-        & (F.col("n_toks_b") >= F.ceil(F.col("n_toks_a") * F.lit(threshold)))
-        & (F.col("n_toks_a") >= F.ceil(F.col("n_toks_b") * F.lit(threshold)))
-    )
-    inter = F.size(F.array_intersect(F.col("toks_a"), F.col("toks_b")))
-    # same identity as jaccard_pairs: sizes are precomputed, skip the
-    # second array pass array_union would cost per candidate pair
-    union = F.col("n_toks_a") + F.col("n_toks_b") - inter
-    jac = inter / F.nullif(union.cast("double"), F.lit(0.0))
-    return (
-        a.join(b, cond)
-        .select(
-            F.col("id_a"),
-            F.col("id_b"),
-            det_round(jac, scale).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
-
-
 def jaccard_incident_pairs_prepped(
     batch_toks: DataFrame,
     seen_toks: DataFrame,
@@ -1387,7 +1202,7 @@ def jaccard_incident_pairs_prepped(
     scale: int = 4,
 ) -> DataFrame:
     """All BATCH-INCIDENT exact-Jaccard pairs in ONE join: the union of
-    :func:`jaccard_cross_pairs_prepped` (batch x existing) and
+    the batch x existing cross pairs and
     :func:`jaccard_pairs_prepped` (batch self-pairs, id_a < id_b),
     value-identical pair for pair.
 

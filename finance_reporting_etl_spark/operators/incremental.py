@@ -1,11 +1,13 @@
-"""Incremental loading: append + merge-on-key (SURVEY §2.10 O5).
+"""Incremental loading: merge-on-key, history and the publish swap
+(SURVEY §2.10 O5).
 
 The reference gestures at incremental loading for scale-up
-(README.md:558) without implementing it. Design here: daily batches
-append to a date-partitioned table; consumers read through
-``merge_latest`` which collapses to the newest version per business key
-— the MERGE-less pattern that works on plain Parquet at any scale
-(partition-pruned reads + one window per key).
+(README.md:558) without implementing it. Design here: consumers read
+through ``merge_latest``, which collapses to the newest version per
+business key — the MERGE-less pattern that works on plain Parquet at
+any scale (partition-pruned reads + one window per key).
+``checked_swap`` is the one rename-aside swap that replaces a
+maintained parquet dir (write-audit-publish, streaming state).
 """
 
 from __future__ import annotations
@@ -13,7 +15,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from finance_reporting_etl_spark.tables import _read_parquet
 
 
 def checked_swap(fs, live, staged, old) -> None:
@@ -30,8 +31,7 @@ def checked_swap(fs, live, staged, old) -> None:
     4. only after verifying ``live`` exists, delete ``old``.
 
     The unrecoverable window is the single rename in step 3 after
-    step 2 moved live aside — identical to compact_partition's
-    documented crash policy. Single-writer only.
+    step 2 moved live aside. Single-writer only.
 
     A backup WITHOUT a live table means a previous swap crashed after
     moving live aside — ``old`` is then the only surviving copy, so
@@ -82,116 +82,16 @@ def merge_latest(
     return df.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") == 1).drop("__rn")
 
 
-def append_partitioned(
-    df: DataFrame,
-    path: str,
-    partition_cols: list[str],
-    mode: str = "append",
-) -> None:
-    """Partition-wise append — the hypertable-style write
-    (README.md:268 create_hypertable ≙ partitionBy on the time column)."""
-    df.write.mode(mode).partitionBy(*partition_cols).parquet(path)
-
-
-def overwrite_partitions_dynamic(
-    df: DataFrame,
-    path: str,
-    partition_cols: list[str],
-) -> None:
-    """Idempotent daily re-load: overwrite ONLY the partitions present
-    in ``df``, leaving all others untouched
-    (``spark.sql.sources.partitionOverwriteMode=dynamic``).
-
-    This is the correct replay semantics for a backfill/late-restate
-    job at 100 TB: re-running a day rewrites that day's directory
-    atomically per partition instead of truncating the table (static
-    overwrite) or duplicating rows (append). Restores the session's
-    prior mode on exit.
-    """
-    spark = df.sparkSession
-    key = "spark.sql.sources.partitionOverwriteMode"
-    prev = spark.conf.get(key, "static")
-    spark.conf.set(key, "dynamic")
-    try:
-        df.write.mode("overwrite").partitionBy(*partition_cols).parquet(path)
-    finally:
-        spark.conf.set(key, prev)
-
-
-def read_evolved(spark, path: str) -> DataFrame:
-    """Schema-on-read union over snapshots with evolved schemas:
-    ``mergeSchema`` reconciles parquet files that gained columns over
-    time (added columns read as NULL for old files). The per-file
-    footer drives the merge — no rewrite of historical data, the
-    standard additive-evolution path for an append-only table."""
-    return spark.read.option("mergeSchema", "true").parquet(path)
-
-
 def retain(df: DataFrame, ts_col: str, horizon) -> DataFrame:
     """S12 retention window: rows at or after ``horizon``.
 
     The reference manages retention with an S3 lifecycle policy
     (readme.md:398-427: raw data kept 90 days, then tiered out); the
-    engine-side analog is this filter for reads plus
-    ``drop_expired_partitions`` for storage. The predicate pushes to the
-    parquet scan, and on a time-partitioned table it prunes whole
-    partitions before any file is opened.
+    engine-side analog is this filter for reads. The predicate pushes
+    to the parquet scan, and on a time-partitioned table it prunes
+    whole partitions before any file is opened.
     """
     return df.filter(F.col(ts_col) >= F.lit(horizon))
-
-
-def drop_expired_partitions(
-    spark, path: str, partition_col: str, horizon_value: str
-) -> list[str]:
-    """Partition-drop compaction for a ``partitionBy(partition_col)``
-    parquet table: delete every ``col=value`` directory with
-    ``value < horizon_value`` (lexicographic — correct for ISO dates and
-    zero-padded keys). No data rewrite: expiry is O(#partitions) metadata
-    ops, the same shape as TimescaleDB's drop_chunks / the S3 lifecycle
-    rule. Uses Spark's Hadoop FileSystem so it works on HDFS/S3A paths
-    as well as local ones. Returns the dropped partition values.
-    """
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(conf)
-    prefix = f"{partition_col}="
-    dropped: list[str] = []
-    if not fs.exists(p):
-        return dropped
-    for status in fs.listStatus(p):
-        if not status.isDirectory():
-            continue
-        name = status.getPath().getName()
-        if not name.startswith(prefix):
-            continue
-        value = name[len(prefix):]
-        if value < horizon_value:
-            # Hadoop delete() returns False on failure instead of
-            # throwing — reporting an undropped partition as dropped
-            # would let expired data silently persist (review)
-            if not fs.delete(status.getPath(), True):
-                raise IOError(
-                    f"failed to delete expired partition {status.getPath()}"
-                )
-            dropped.append(value)
-    return dropped
-
-
-def upsert_parquet(
-    spark,
-    existing_path: str,
-    incoming: DataFrame,
-    keys: list[str],
-    order_col: str,
-    tiebreak_col: str | None = None,
-) -> DataFrame:
-    """Read-merge view over existing + incoming (no rewrite): union by
-    name then latest-per-key. For true compaction, write the result back
-    partition-by-partition during low-traffic windows."""
-    existing = _read_parquet(spark, existing_path)
-    merged = existing.unionByName(incoming, allowMissingColumns=True)
-    return merge_latest(merged, keys, order_col, tiebreak_col)
 
 
 def table_diff(a: DataFrame, b: DataFrame) -> DataFrame:
@@ -276,105 +176,3 @@ def scd2_intervals(
         F.lead(order_col).over(w2).alias("valid_to"),
     )
 
-
-def compact_partition(
-    spark,
-    path: str,
-    partition_col: str,
-    partition_value: str,
-    target_bytes: int = 128 * 1024 * 1024,
-) -> int:
-    """Small-file compaction for one partition of a
-    ``partitionBy(partition_col)`` parquet table: rewrite the
-    ``col=value`` directory into ``ceil(bytes / target_bytes)`` files.
-
-    Streaming/incremental appends leave each partition with one file
-    per micro-batch/task — at 100 TB that is millions of kilobyte
-    files, and scan planning (file listing + footer reads) dominates
-    query time. Nightly compaction to scan-sized files (default 128 MiB,
-    matching ``spark.sql.files.maxPartitionBytes``) is the standard
-    maintenance pass. The rewrite is atomic-enough for a single-writer
-    table (write to ``_compact_tmp``, then swap); concurrent-writer
-    tables need a table format with transactions (Delta/Iceberg).
-
-    Returns the resulting file count.
-    """
-    import math
-
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    part_dir = f"{path}/{partition_col}={partition_value}"
-    p = jvm.org.apache.hadoop.fs.Path(part_dir)
-    fs = p.getFileSystem(conf)
-    if not fs.exists(p):
-        return 0
-    total = fs.getContentSummary(p).getLength()
-    n_files = max(1, math.ceil(total / target_bytes))
-    df = _read_parquet(spark, part_dir)
-    tmp = f"{path}/_compact_tmp_{partition_col}={partition_value}"
-    df.repartition(n_files).write.mode("overwrite").parquet(tmp)
-    # swap via rename-aside (checked_swap): old data survives as
-    # _compact_old until the new files are in place; every rename
-    # boolean is checked so a silent failure can't orphan the backup
-    # delete. The unrecoverable window is a single rename.
-    old = jvm.org.apache.hadoop.fs.Path(
-        f"{path}/_compact_old_{partition_col}={partition_value}"
-    )
-    HPath = jvm.org.apache.hadoop.fs.Path
-    checked_swap(fs, p, HPath(tmp), old)
-    return sum(
-        1
-        for s in fs.listStatus(p)
-        if s.getPath().getName().endswith(".parquet")
-    )
-
-
-def forget_keys(
-    spark,
-    path: str,
-    partition_col: str,
-    key_col: str,
-    keys: list,
-) -> int:
-    """Right-to-be-forgotten delete on a ``partitionBy(partition_col)``
-    parquet table WITHOUT a full-table rewrite: a pruned scan finds the
-    partitions that actually contain the keys, and only those are
-    rewritten (anti-filtered, staged, rename-aside swapped — the
-    compact_partition crash policy). Untouched partitions keep their
-    files byte-for-byte, which at 100 TB is the difference between a
-    bounded nightly job and rewriting the lake.
-
-    The affected-partition list is a driver collect bounded by the
-    number of partitions a subject can appear in (days x user), not by
-    data size. Single-writer; transactional formats (Delta/Iceberg)
-    subsume this with deletion vectors.
-
-    Returns the number of partitions rewritten.
-    """
-    df = _read_parquet(spark, path)
-    affected = [
-        r[0]
-        for r in df.filter(F.col(key_col).isin(keys))
-        .select(partition_col)
-        .distinct()
-        .collect()
-    ]
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    HPath = jvm.org.apache.hadoop.fs.Path
-    for pv in affected:
-        part_dir = f"{path}/{partition_col}={pv}"
-        # NULL-keyed rows (e.g. anonymous events) must SURVIVE the
-        # rewrite: ~isin(keys) evaluates to NULL for NULL keys and
-        # filter drops NULL predicates — without the isNull() arm a
-        # GDPR delete would silently destroy unrelated rows (review)
-        keep = _read_parquet(spark, part_dir).filter(
-            (~F.col(key_col).isin(keys)) | F.col(key_col).isNull()
-        )
-        tmp = f"{path}/_forget_tmp_{partition_col}={pv}"
-        keep.write.mode("overwrite").parquet(tmp)
-        p = HPath(part_dir)
-        fs = p.getFileSystem(conf)
-        old = HPath(f"{path}/_forget_old_{partition_col}={pv}")
-        checked_swap(fs, p, HPath(tmp), old)
-    return len(affected)

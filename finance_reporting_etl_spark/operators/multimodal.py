@@ -413,21 +413,6 @@ def resize_png(media: DataFrame, out_w: int, out_h: int) -> DataFrame:
     return media.mapInPandas(batches, schema=out_schema)
 
 
-def resize_stub(media: DataFrame, width: int, height: int) -> DataFrame:
-    """Image resize stage — metadata-only stand-in kept for the
-    fake-media pipeline (non-PNG payloads); ``resize_png`` above is the
-    real path for decodable payloads."""
-    return media.withColumn(
-        "meta",
-        F.struct(
-            F.lit(width).cast("int").alias("width"),
-            F.lit(height).cast("int").alias("height"),
-            F.col("meta.duration_ms").alias("duration_ms"),
-            F.col("meta.format").alias("format"),
-        ),
-    )
-
-
 def frame_sample(media: DataFrame, fps: float = 1.0, max_frames: int = 16) -> DataFrame:
     """Video frame sampling: one output row per sampled timestamp.
 

@@ -19,8 +19,10 @@ remedies as reusable operators:
   (``write_bucketed``) pre-shuffles ONCE at write time:
   ``bucketBy(n, key)`` stores hash-partitioned buckets so Spark's
   planner proves both sides share the partitioning and plans a
-  sort-merge join with NO Exchange on either side (verify with
-  ``assert_no_shuffle_join``).
+  sort-merge join with NO Exchange on either side.
+
+Layout: ``zorder_key`` is the Morton interleave behind two-column
+zone-map pruning, with ``zorder_sql`` as its SQL twin.
 """
 
 from __future__ import annotations
@@ -136,66 +138,6 @@ def bucketed_join(
     return left.join(right, keys, how)
 
 
-def write_sorted(
-    df: DataFrame,
-    path: str,
-    sort_cols: list[str],
-    n_files: int = 8,
-    row_group_bytes: int = 128 * 1024 * 1024,
-    mode: str = "overwrite",
-) -> None:
-    """Range-partition + sort-within-partitions write: the data-layout
-    half of zone-map pruning.
-
-    Parquet stores per-row-group min/max for every column; the reader
-    skips a row group when a pushed filter falls outside its range.
-    Unsorted data makes those ranges useless (every group spans the
-    whole domain); sorting on the filter key makes them tight, so a
-    selective scan reads ~selectivity x data instead of all of it —
-    measured 26x fewer scanned rows at sf0.1 (see PLANS.md Round-4).
-    This is the finer-grained sibling of ``partitionBy`` pruning and
-    the single cheapest scan optimization for an append-once
-    read-forever 100 TB table. Caveat pinned by the test: stats pruning
-    engages for numeric/string sort keys; TIMESTAMP columns did not
-    prune in this Spark build — prefer `partitionBy(date)` + a numeric
-    sort key (epoch micros) for time layouts.
-    """
-    (
-        df.repartitionByRange(n_files, *sort_cols)
-        .sortWithinPartitions(*sort_cols)
-        .write.option("parquet.block.size", row_group_bytes)
-        .mode(mode)
-        .parquet(path)
-    )
-
-
-def scan_output_rows(df: DataFrame) -> int:
-    """Execute ``df`` and return the scan node's numOutputRows metric —
-    rows surviving parquet row-group/page pruning, BEFORE Spark's own
-    Filter. The observable for zone-map effectiveness."""
-    # metrics live on the executed plan of this DataFrame's own query
-    # execution only after an action runs through it (a write would
-    # execute a sibling QueryExecution and leave these metrics at zero)
-    df.toPandas()
-    leaves = df._jdf.queryExecution().executedPlan().collectLeaves()
-    total = 0
-    for i in range(leaves.size()):
-        it = leaves.apply(i).metrics().iterator()
-        while it.hasNext():
-            kv = it.next()
-            if kv._1() == "numOutputRows":
-                total += kv._2().value()
-    return total
-
-
-def assert_no_shuffle_join(df: DataFrame) -> None:
-    """Raise if the physical plan contains an Exchange feeding the join
-    — the verification hook for bucketed co-location."""
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    if "Exchange" in plan:
-        raise AssertionError(f"plan shuffles:\n{plan}")
-
-
 def zorder_key(x: "Column | str", y: "Column | str", bits: int = 16) -> Column:
     """Morton (Z-order) key: interleave the low ``bits`` bits of two
     non-negative int columns — bit i of x lands at position 2i, bit i
@@ -234,30 +176,6 @@ def zorder_sql(x_sql: str, y_sql: str, bits: int = 8) -> str:
         terms.append(f"(((({x_sql}) >> {i}) & 1) << {2 * i})")
         terms.append(f"(((({y_sql}) >> {i}) & 1) << {2 * i + 1})")
     return "(" + " | ".join(terms) + ")"
-
-
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    x_col: str,
-    y_col: str,
-    bits: int = 16,
-    n_files: int = 8,
-    row_group_bytes: int = 128 * 1024 * 1024,
-    mode: str = "overwrite",
-) -> None:
-    """Two-dimensionally clustered write: range-partition + sort by the
-    Morton key of (x_col, y_col), then drop the key — the layout
-    survives in the row-group statistics of both columns."""
-    keyed = df.withColumn("__z", zorder_key(x_col, y_col, bits))
-    (
-        keyed.repartitionByRange(n_files, "__z")
-        .sortWithinPartitions("__z")
-        .drop("__z")
-        .write.option("parquet.block.size", row_group_bytes)
-        .mode(mode)
-        .parquet(path)
-    )
 
 
 def join_key_skew_profile(df, key_col: str, k: int = 20):

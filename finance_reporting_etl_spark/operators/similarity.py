@@ -5,10 +5,14 @@
   window over (query, score). At 100 TB the scan dominates — no
   shuffle of the candidate table, only of the (n_queries x n_candidates)
   scored pairs, bounded by broadcasting queries and pre-filtering.
-- ``hyperplane_lsh_topk``: the scale path. Deterministic random
-  hyperplanes (seeded numpy, shipped as literals) bucket vectors by
-  sign pattern; top-k runs within each bucket only. Probe multiple
-  bucket permutations for recall if needed.
+- ``hyperplane_buckets`` + ``topk_from_buckets``: the scale path.
+  Deterministic random hyperplanes (seeded numpy, shipped as literals)
+  bucket vectors by sign pattern in ``n_tables`` tables; a candidate is
+  scored if it shares a bucket with the query in ANY table, so cost
+  scales with bucket occupancy, not n^2.
+- ``ivf_index`` + ``ivf_probes`` + ``ivf_topk_from_index``: IVF-flat,
+  each vector in its nearest cell, each query probing its ``nprobe``
+  nearest cells.
 
 Scores accumulate in float64 via built-in higher-order functions
 (functions/vectors.py) — no Python in the hot path.
@@ -179,39 +183,6 @@ def topk_from_buckets(
     )
 
 
-def hyperplane_lsh_topk(
-    embeddings: DataFrame,
-    query_ids: list[int],
-    k: int = 10,
-    n_planes: int = 4,
-    n_tables: int = 8,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
-    scale: int = 6,
-) -> DataFrame:
-    """Approximate top-k via multi-table hyperplane LSH.
-
-    Each of ``n_tables`` hash tables assigns a 2^n_planes bucket; a
-    candidate is scored if it shares a bucket with the query in ANY
-    table (recall ~= 1-(1-p^k)^L for per-plane collision prob p). The
-    join key is (table, bucket) — the cross-bucket pair space never
-    materializes, so cost scales with bucket occupancy, not n^2. Tuning:
-    more planes -> smaller buckets (cheaper, lower recall); more tables
-    -> higher recall (linear cost in L). Benchmarked against brute
-    force for recall in tests.
-
-    Composition of ``hyperplane_buckets`` (Catalyst pushes the query-id
-    filter below the bucket UDF, so the query side hashes only |Q| rows)
-    and ``topk_from_buckets``.
-    """
-    buckets = hyperplane_buckets(
-        spread(embeddings), n_planes, n_tables, dim, id_col, vec_col, seed
-    )
-    return topk_from_buckets(buckets, embeddings, query_ids, k, id_col, vec_col, scale)
-
-
 # --- IVF (inverted-file) ANN ------------------------------------------------
 
 
@@ -242,37 +213,6 @@ def _cell_assign_udf(centroids: np.ndarray, nprobe: int):
         return pd.Series(list(top.astype("int32")))
 
     return assign
-
-
-def ivf_topk(
-    embeddings: DataFrame,
-    query_ids: list[int],
-    k: int = 10,
-    n_cells: int = 16,
-    nprobe: int = 4,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 7,
-    scale: int = 6,
-) -> DataFrame:
-    """Approximate top-k via an inverted-file index (IVF-flat).
-
-    Candidates live in their single nearest cell; each query probes its
-    ``nprobe`` nearest cells. The join key is the cell id, so the pair
-    space is bucket-local (never n^2) and the shuffle partitions by
-    cell. At 100 TB the candidate side is written partitioned by cell
-    once and re-probed many times — the classic IVF read-amortization.
-    Recall rises with nprobe (queries probe more cells), cost with
-    n_cells (smaller cells, more of them).
-
-    Exact cosine + deterministic (score DESC, id ASC) top-k inside the
-    probed set; Arrow-vectorized numpy for the quantizer, built-in
-    Catalyst expressions everywhere else.
-    """
-    index = ivf_index(spread(embeddings), n_cells, dim, id_col, vec_col, seed)
-    probes = ivf_probes(embeddings, query_ids, n_cells, nprobe, dim, id_col, vec_col, seed)
-    return ivf_topk_from_index(index, probes, embeddings, k, id_col, vec_col, scale)
 
 
 def ivf_cell_expr(

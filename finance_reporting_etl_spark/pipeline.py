@@ -238,8 +238,9 @@ def publish_validated(
     data is never visible to readers, which is the entire point of WAP
     on a 100 TB nightly build.
 
-    Publish uses ``operators.incremental.checked_swap`` — the same
-    rename-aside ordering as ``compact_partition``, with every Hadoop
+    Publish uses ``operators.incremental.checked_swap`` — the
+    rename-aside swap streaming state also uses
+    (``streaming.merge.overwrite_state_dir``), with every Hadoop
     ``rename()`` boolean checked: live data survives (as
     ``<path>_wap_old``) until the staged files are in place, and the
     backup is never deleted after a failed rename. The unrecoverable

@@ -82,6 +82,27 @@ def _persist_aux(spark: SparkSession, df: DataFrame, name: str) -> DataFrame:
     return _read_parquet(spark, path)
 
 
+# shared aux artifacts: the names one build persists -> the (fixture
+# dir, aux dir) it last ran for
+_AUX_BUILT: dict[tuple[str, ...], tuple[str, str]] = {}
+
+
+def _build_aux_once(
+    sf_dir: str, names: tuple[str, ...], build: Callable[[], None]
+) -> None:
+    """Run ``build``, which persists ``names`` under ``_AUX_DIR``,
+    unless it already ran for this (sf_dir, _AUX_DIR) and each of
+    those dirs still exists: when the aux dir moves (benchmark workers,
+    run isolation) or an artifact is removed, it is rebuilt instead of
+    read as missing."""
+    key = (sf_dir, _AUX_DIR)
+    if _AUX_BUILT.get(names) != key or not all(
+        os.path.isdir(f"{_AUX_DIR}/{n}") for n in names
+    ):
+        build()
+        _AUX_BUILT[names] = key
+
+
 # Bounded-eval guard for the decontamination family (VERDICT r13 task
 # 6): those queries broadcast-hint eval-side frames (probes, eval
 # vectors, eval ids) on the argument that an eval suite is a small
@@ -2454,14 +2475,11 @@ def q_variant_event_payloads(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_PQ_CACHE: dict = {}
-
-
 def _pq_tables(spark: SparkSession, sf_dir: str):
     """Persisted PQ artifacts (codes index, probes, query LUTs) shared
     by `ann_ivfpq_topk` and `ann_rerank_exact` — the builds are
-    deterministic (seeded training), so one set serves both, cached
-    once per (process, fixture dir) like the co-purchase pair table.
+    deterministic (seeded training), so one set serves both, built
+    once per (fixture dir, aux dir) like the co-purchase pair table.
     In production these are the maintained serving-index tables."""
     from finance_reporting_etl_spark.operators.similarity import (
         ivf_probes,
@@ -2470,7 +2488,7 @@ def _pq_tables(spark: SparkSession, sf_dir: str):
         pq_train_codebooks,
     )
 
-    if _PQ_CACHE.get("sf") != sf_dir:
+    def build() -> None:
         emb = _t(spark, sf_dir, "embeddings")
         books = pq_train_codebooks(emb)
         qids = [0, 1, 2, 3, 4]
@@ -2484,7 +2502,8 @@ def _pq_tables(spark: SparkSession, sf_dir: str):
             ),
             "pq_luts",
         )
-        _PQ_CACHE["sf"] = sf_dir
+
+    _build_aux_once(sf_dir, ("pq_index", "ivfpq_probes", "pq_luts"), build)
     return (
         _read_parquet(spark, f"{_AUX_DIR}/pq_index"),
         _read_parquet(spark, f"{_AUX_DIR}/ivfpq_probes"),
@@ -3088,7 +3107,7 @@ def q_label_time_to_next(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same one-shuffle union+window as the backward operator, scanned
     in reverse; purchases pre-collapse to one row per (user, ts) so
     equal-instant payloads are deterministic in both engines."""
-    from finance_reporting_etl_spark.operators.asof import asof_join_forward
+    from finance_reporting_etl_spark.operators.asof import asof_join
 
     ev = _t(spark, sf_dir, "events")
     views = ev.filter(F.col("event_type") == "view").select("user_id", "event_id", "ts")
@@ -3097,8 +3116,8 @@ def q_label_time_to_next(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("user_id", "ts")
         .agg(F.min("event_id").alias("next_event_id"))
     )
-    out = asof_join_forward(
-        views, purchases, ["user_id"], right_cols=["next_event_id"]
+    out = asof_join(
+        views, purchases, ["user_id"], right_cols=["next_event_id"], direction="forward"
     )
     return out.select(
         "user_id",
@@ -3378,16 +3397,13 @@ def q_streaming_view_purchase_join(spark: SparkSession, sf_dir: str) -> DataFram
 # would maintain anyway.
 # ---------------------------------------------------------------------------
 
-_COPURCHASE_CACHE: dict = {}
-
-
 def _copurchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Directed co-purchase pairs with multiplicity: one row per
     ordered part pair sharing >=1 order, with the line-combination
     count and the distinct co-order count. Symmetric by construction
     ((x,y) present iff (y,x) is)."""
-    path = f"{_AUX_DIR}/copurchase_pairs"
-    if _COPURCHASE_CACHE.get("key") != (sf_dir, _AUX_DIR) or not os.path.isdir(path):
+
+    def build() -> None:
         li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
         # pre-aggregate to one row per (order, part) BEFORE the self-
         # join (guide §2.3 aggregate-before-shuffle): n_lines is then
@@ -3420,8 +3436,9 @@ def _copurchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         _persist_aux(spark, pairs, "copurchase_pairs")
-        _COPURCHASE_CACHE["key"] = (sf_dir, _AUX_DIR)
-    return _read_parquet(spark, path)
+
+    _build_aux_once(sf_dir, ("copurchase_pairs",), build)
+    return _read_parquet(spark, f"{_AUX_DIR}/copurchase_pairs")
 
 
 def _copurchase_edges_sql() -> str:

@@ -25,7 +25,9 @@ def write_csv_staged(
     mode: str = "overwrite",
 ) -> None:
     """Headered CSV sink; partition layout replaces templated S3 keys
-    (README.md:358 '{company}_{report_type}.csv' ≙ partitionBy both)."""
+    (README.md:358 '{company}_{report_type}.csv' ≙ partitionBy both).
+
+    Paper ingest surface COVERAGE S5; no catalog query runs it."""
     writer = df.write.mode(mode).option("header", True)
     if partition_cols:
         writer = writer.partitionBy(*partition_cols)
@@ -56,7 +58,9 @@ def bulk_load_csv(
     mode: str = "append",
 ) -> DataFrame:
     """S3ToSqlOperator analog: CSV -> parquet-backed table, append mode
-    (the reference loads into raw_financial_data per DAG run)."""
+    (the reference loads into raw_financial_data per DAG run).
+
+    Paper ingest surface COVERAGE S7; no catalog query runs it."""
     df = read_csv(spark, csv_path, schema=schema)
     df.write.mode(mode).parquet(table_path)
     return _read_parquet(spark, table_path)

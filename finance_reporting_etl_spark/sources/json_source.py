@@ -22,7 +22,9 @@ from pyspark.sql import functions as F
 
 def read_json(spark: SparkSession, path: str, multiline: bool = True) -> DataFrame:
     """Raw JSON read (schema-on-read, permissive — matches the
-    reference's lax ingest typing, SURVEY §1.3)."""
+    reference's lax ingest typing, SURVEY §1.3).
+
+    Paper ingest surface COVERAGE S4; no catalog query runs it."""
     return spark.read.option("multiLine", multiline).json(path)
 
 
@@ -40,31 +42,16 @@ def flatten_observations(raw: DataFrame) -> DataFrame:
     )
 
 
-def flatten_annual_reports(raw: DataFrame, symbol: str, report_type: str) -> DataFrame:
-    """Alpha Vantage shape -> one row per report, with literal
-    symbol/report_type columns (README.md:347-350: pd.DataFrame(
-    data['annualReports']); df['symbol'] = company; ...)."""
-    reports = raw.select(F.explode("annualReports").alias("r")).select("r.*")
-    return reports.select(
-        F.lit(symbol).alias("symbol"),
-        F.lit(report_type).alias("report_type"),
-        F.col("fiscalDateEnding").cast("date").alias("fiscal_date"),
-        F.col("reportedCurrency").alias("currency"),
-        *[
-            F.col(c).try_cast("decimal(18,2)").alias(_snake(c))
-            for c in reports.columns
-            if c not in ("fiscalDateEnding", "reportedCurrency")
-        ],
-    )
-
-
 def flatten_annual_reports_batch(raw: DataFrame, report_type: str) -> DataFrame:
-    """Batched :func:`flatten_annual_reports`: one DataFrame holding
-    MANY companies' payloads of a single report type (each payload
-    carries its ``symbol`` field, as the Alpha Vantage response does),
-    flattened in one plan — one Spark read per REPORT TYPE instead of
-    one per (company, type) pair, so the fan-out cost stops growing
-    with the company list (r5 review)."""
+    """Alpha Vantage shape -> one row per (company, report), with a
+    literal report_type column (README.md:347-350: pd.DataFrame(
+    data['annualReports']); df['symbol'] = company; ...).
+
+    One DataFrame holds MANY companies' payloads of a single report
+    type (each payload carries its ``symbol`` field, as the Alpha
+    Vantage response does), flattened in one plan — one Spark read per
+    REPORT TYPE instead of one per (company, type) pair, so the fan-out
+    cost stops growing with the company list."""
     reports = raw.select(
         F.col("symbol"), F.explode("annualReports").alias("r")
     ).select("symbol", "r.*")
@@ -93,5 +80,7 @@ def _snake(camel: str) -> str:
 
 
 def write_json(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """JSON file sink (fetch_data.py:13-14 analog)."""
+    """JSON file sink (fetch_data.py:13-14 analog).
+
+    Paper ingest surface COVERAGE S4; no catalog query runs it."""
     df.write.mode(mode).json(path)

@@ -58,7 +58,9 @@ def fetch_series(
     api_key: str = "demo",
     limiter: RateLimiter | None = None,
 ) -> dict:
-    """FRED-style series GET (fetch_data.py:5-11 URL construction)."""
+    """FRED-style series GET (fetch_data.py:5-11 URL construction).
+
+    Paper ingest surface COVERAGE S1; no catalog query runs it."""
     if limiter:
         limiter.wait()
     url = f"{base_url}?series_id={series_id}&api_key={api_key}&file_type=json"

@@ -50,7 +50,9 @@ ACCEPTED_REPORT_TYPES = ("income_statement", "balance_sheet", "cash_flow")  # RE
 
 def create_table(spark: SparkSession, name: str, schema: T.StructType, path: str | None = None) -> DataFrame:
     """CREATE TABLE IF NOT EXISTS analog: register an empty, typed view
-    (or Parquet-backed table when ``path`` is given)."""
+    (or Parquet-backed table when ``path`` is given).
+
+    Paper ingest surface COVERAGE S8; no catalog query runs it."""
     empty = spark.createDataFrame([], schema)
     if path is not None:
         empty.write.mode("ignore").parquet(path)
@@ -86,6 +88,8 @@ def create_table_sql(
     else managed under spark.sql.warehouse.dir), optionally partitioned.
     Unlike ``create_table`` (temp view), the result is a catalog table
     visible to any session sharing the metastore.
+
+    Paper ingest surface COVERAGE S8; no catalog query runs it.
     """
     cols = schema_to_ddl(schema)
     parts = f" PARTITIONED BY ({', '.join(partition_cols)})" if partition_cols else ""

@@ -29,55 +29,35 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from finance_reporting_etl_spark.operators.incremental import merge_latest
+from finance_reporting_etl_spark.operators.incremental import checked_swap, merge_latest
 from finance_reporting_etl_spark.streaming.staging import fold_stream
 from finance_reporting_etl_spark.tables import _read_parquet
 
 
 def overwrite_state_dir(df: DataFrame, path: str) -> None:
     """Replace a maintained parquet state dir with ``df`` when the
-    plan READS the same dir: write to a sibling, then swap via
-    FileSystem rename. One materialization (the direct write) instead
-    of the old localCheckpoint-then-write (which wrote the whole state
-    to executor storage and then re-read it to write parquet — two
-    copies per micro-batch).
+    plan READS the same dir: write to the sibling ``<path>__next``,
+    then swap it in with :func:`checked_swap` (live renamed aside to
+    ``<path>__old``, every Hadoop ``rename`` boolean checked, the
+    backup never deleted after a failed rename). One materialization
+    (the direct write) instead of a localCheckpoint-then-write.
 
-    The swap renames the live dir ASIDE (never deletes it first) and
-    restores it if the swap-in fails, so no failure mode leaves the
-    state missing; Hadoop ``rename`` signals most failures by
-    returning false, so every return value is checked (ADVICE r14).
     The two-rename window is still not transactional — the module
     docstring scopes plain parquet state to the demo harness;
     production uses MERGE INTO. A crash between the two renames leaves
-    the state only as ``<path>__old``; ``_read_parquet_if_exists``
-    renames it back before the next batch reads the state."""
+    the state only as ``<path>__old``: ``_read_parquet_if_exists``
+    renames it back before the next batch reads the state, and a
+    write that finds it first refuses rather than delete it."""
     sess = df.sparkSession
-    jvm = sess._jvm
-    conf = sess._jsc.hadoopConfiguration()
-    new_path = path + "__next"
-    old_path = path + "__old"
-    df.write.mode("overwrite").parquet(new_path)
-    hp = jvm.org.apache.hadoop.fs.Path(path)
-    hn = jvm.org.apache.hadoop.fs.Path(new_path)
-    ho = jvm.org.apache.hadoop.fs.Path(old_path)
-    fs = hp.getFileSystem(conf)
-    had_prev = fs.exists(hp)
-    if had_prev:
-        # a leftover __old is stale only while the live dir exists;
-        # without it, __old is the last committed state
-        if fs.exists(ho):
-            fs.delete(ho, True)
-        if not fs.rename(hp, ho):
-            raise IOError(f"rename {path} -> {old_path} failed")
-    if not fs.rename(hn, hp):
-        if had_prev and not fs.rename(ho, hp):
-            raise IOError(
-                f"rename {new_path} -> {path} failed AND restoring "
-                f"{old_path} failed — state dir lost"
-            )
-        raise IOError(f"rename {new_path} -> {path} failed")
-    if had_prev:
-        fs.delete(ho, True)
+    Path = sess._jvm.org.apache.hadoop.fs.Path
+    df.write.mode("overwrite").parquet(path + "__next")
+    live = Path(path)
+    checked_swap(
+        live.getFileSystem(sess._jsc.hadoopConfiguration()),
+        live,
+        Path(path + "__next"),
+        Path(path + "__old"),
+    )
 
 
 def _read_parquet_if_exists(sess, path: str):

@@ -32,7 +32,8 @@ def test_exact_dedup_survivor_deterministic(docs):
 
 
 def test_jaccard_pairs_finds_near_dup(docs):
-    pairs = dedup.jaccard_pairs(docs, block_cols=("lang",), threshold=0.5)
+    prepped = dedup.jaccard_prep(docs, block_cols=("lang",))
+    pairs = dedup.jaccard_pairs_prepped(prepped, block_cols=("lang",), threshold=0.5)
     got = {(r.id_a, r.id_b): r.jaccard for r in pairs.collect()}
     assert got[(0, 1)] == 1.0
     assert got[(0, 2)] == 1.0  # lowercased tokens identical
@@ -43,7 +44,11 @@ def test_jaccard_pairs_finds_near_dup(docs):
 
 
 def test_minhash_lsh_matches_planted_dups(docs):
-    pairs = dedup.minhash_near_dup_pairs(docs, threshold=0.5)
+    idx = dedup.minhash_index(docs)
+    bands = idx.select("id", F.explode("bands").alias("u")).select(
+        "id", "u.band_idx", "u.band_hash"
+    )
+    pairs = dedup.minhash_pairs_from_bands(bands, idx.select("id", "sh"), threshold=0.5)
     got = {(r.id_a, r.id_b) for r in pairs.collect()}
     assert {(0, 1), (0, 2), (1, 2)} <= got  # exact dups always collide
     assert (0, 4) not in got
@@ -53,7 +58,7 @@ def test_simhash_identical_and_blocking(docs):
     out = dedup.simhash(docs)
     sims = {r.id: r.simhash for r in out.collect()}
     assert sims[0] == sims[1] == sims[2]  # same token sets -> same simhash
-    pairs = dedup.simhash_near_dup_pairs(docs, max_hamming=3)
+    pairs = dedup.simhash_pairs_from_sigs(out, max_hamming=3)
     got = {(r.id_a, r.id_b): r.hamming for r in pairs.collect()}
     assert got[(0, 1)] == 0 and got[(0, 2)] == 0
 
@@ -81,7 +86,8 @@ def test_brute_force_topk_properties(emb):
 def test_lsh_ann_recall_vs_brute_force(emb):
     qids = list(range(10))
     exact = similarity.brute_force_topk(emb, qids, k=5)
-    approx = similarity.hyperplane_lsh_topk(emb, qids, k=5, n_planes=4, n_tables=8)
+    buckets = similarity.hyperplane_buckets(emb, n_planes=4, n_tables=8)
+    approx = similarity.topk_from_buckets(buckets, emb, qids, k=5)
     e = {(r.query_id, r.neighbor_id) for r in exact.collect()}
     a = {(r.query_id, r.neighbor_id) for r in approx.collect()}
     recall = len(e & a) / len(e)
@@ -93,7 +99,9 @@ def test_lsh_ann_recall_vs_brute_force(emb):
 def test_ivf_ann_recall_vs_brute_force(emb):
     qids = list(range(10))
     exact = similarity.brute_force_topk(emb, qids, k=5)
-    approx = similarity.ivf_topk(emb, qids, k=5, n_cells=16, nprobe=4)
+    index = similarity.ivf_index(emb, n_cells=16)
+    probes = similarity.ivf_probes(emb, qids, n_cells=16, nprobe=4)
+    approx = similarity.ivf_topk_from_index(index, probes, emb, k=5)
     e = {(r.query_id, r.neighbor_id) for r in exact.collect()}
     a = {(r.query_id, r.neighbor_id) for r in approx.collect()}
     recall = len(e & a) / len(e)
@@ -117,60 +125,6 @@ def test_merge_latest(spark):
     out = incremental.merge_latest(df, ["k"], "v", "event_id")
     got = {r.k: r.event_id for r in out.collect()}
     assert got == {"a": 2, "b": 3}  # v=2 wins for 'a'; tie on v -> lowest event_id
-
-
-def test_upsert_parquet(spark, tmp_path):
-    base = str(tmp_path / "t")
-    spark.createDataFrame([(1, 1, "old"), (2, 1, "keep")], "k long, ver long, s string").write.parquet(base)
-    incoming = spark.createDataFrame([(1, 2, "new")], "k long, ver long, s string")
-    out = incremental.upsert_parquet(spark, base, incoming, ["k"], "ver")
-    got = {r.k: r.s for r in out.collect()}
-    assert got == {1: "new", 2: "keep"}
-
-
-def test_append_partitioned_layout(spark, tmp_path):
-    p = str(tmp_path / "part")
-    df = spark.createDataFrame([("2024-01-01", 1.0), ("2024-01-02", 2.0)], "d string, v double")
-    incremental.append_partitioned(df, p, ["d"])
-    import os
-
-    assert any(name.startswith("d=") for name in os.listdir(p))
-    assert spark.read.parquet(p).count() == 2
-
-
-def test_dynamic_partition_overwrite_replaces_only_touched_days(spark, tmp_path):
-    """Backfill replay: rewriting one day must leave other partitions
-    byte-identical and never duplicate rows."""
-    p = str(tmp_path / "dyn")
-    base = spark.createDataFrame(
-        [("2024-01-01", 1.0), ("2024-01-01", 2.0), ("2024-01-02", 3.0)],
-        "d string, v double",
-    )
-    incremental.append_partitioned(base, p, ["d"], mode="overwrite")
-    restated = spark.createDataFrame([("2024-01-01", 9.0)], "d string, v double")
-    incremental.overwrite_partitions_dynamic(restated, p, ["d"])
-    # partition-column inference reads d back as DATE — stringify
-    got = sorted((str(r.d), r.v) for r in spark.read.parquet(p).collect())
-    # day 1 fully replaced (2 rows -> 1), day 2 untouched
-    assert got == [("2024-01-01", 9.0), ("2024-01-02", 3.0)]
-    # session conf restored
-    assert spark.conf.get("spark.sql.sources.partitionOverwriteMode") == "static"
-
-
-def test_schema_evolution_merged_read(spark, tmp_path):
-    """Additive schema evolution: old snapshot lacks a column; merged
-    read reconciles footers and fills NULL for pre-evolution files."""
-    p = str(tmp_path / "evolve")
-    v1 = spark.createDataFrame([(1, "a")], "k long, s string")
-    v1.write.mode("append").parquet(p)
-    v2 = spark.createDataFrame([(2, "b", 7.5)], "k long, s string, score double")
-    v2.write.mode("append").parquet(p)
-    got = {
-        r.k: (r.s, r.score)
-        for r in incremental.read_evolved(spark, p).collect()
-    }
-    assert got == {1: ("a", None), 2: ("b", 7.5)}
-    assert set(incremental.read_evolved(spark, p).columns) == {"k", "s", "score"}
 
 
 def test_multimodal_feature_extract(docs):
@@ -281,13 +235,6 @@ def test_resize_png_real_resample(docs):
                     )
 
 
-def test_multimodal_resize_stub(docs):
-    media = multimodal.attach_fake_media(docs)
-    out = multimodal.resize_stub(media, 224, 224)
-    r = out.first()
-    assert r.meta.width == 224 and r.meta.height == 224 and r.meta.format == "fake/raw"
-
-
 def test_salted_join_matches_plain_join(spark):
     from finance_reporting_etl_spark.operators import scale
 
@@ -330,7 +277,9 @@ def test_bucketed_join_is_shuffle_free(spark, sf_dir, tmp_path):
             sort_cols=["o_orderkey"],
         )
         joined = scale.bucketed_join(spark, "bkt_orders", "bkt_lineitem", ["o_orderkey"])
-        scale.assert_no_shuffle_join(joined)  # co-located: zero Exchange
+        # co-located: no Exchange feeds the join
+        plan = joined._jdf.queryExecution().executedPlan().toString()
+        assert "Exchange" not in plan, plan
         expect = orders.join(li, orders.o_orderkey == li.l_orderkey).count()
         assert joined.count() == expect
     finally:
@@ -368,27 +317,6 @@ def test_retain_filters_horizon(spark):
     )
     kept = incremental.retain(df, "ts", datetime(2024, 1, 10))
     assert sorted(r.id for r in kept.collect()) == [2, 3]
-
-
-def test_drop_expired_partitions(spark, tmp_path):
-    from datetime import datetime
-
-    df = spark.createDataFrame(
-        [
-            (1, datetime(2024, 1, 1, 5), "2024-01-01"),
-            (2, datetime(2024, 1, 2, 5), "2024-01-02"),
-            (3, datetime(2024, 1, 3, 5), "2024-01-03"),
-        ],
-        "id long, ts timestamp, day string",
-    )
-    path = str(tmp_path / "hypertable")
-    incremental.append_partitioned(df, path, ["day"], mode="overwrite")
-    dropped = incremental.drop_expired_partitions(spark, path, "day", "2024-01-03")
-    assert sorted(dropped) == ["2024-01-01", "2024-01-02"]
-    left = spark.read.parquet(path)
-    assert [r.id for r in left.collect()] == [3]
-    # idempotent: second run drops nothing
-    assert incremental.drop_expired_partitions(spark, path, "day", "2024-01-03") == []
 
 
 def test_near_dup_clusters_transitive(spark):
@@ -538,19 +466,17 @@ def test_redact_pii_and_counts(spark):
 
 def test_repetition_metrics_known_values(spark):
     from finance_reporting_etl_spark.functions import text as tx
+    from finance_reporting_etl_spark.operators.corpus import repetition_profile
 
     df = spark.createDataFrame(
         [(1, "a b a b a b"), (2, "all tokens here differ fully"), (3, "x")],
         "id long, text string",
     )
-    got = {
-        r["id"]: r
-        for r in df.select(
-            "id",
-            tx.type_token_ratio("text").alias("ttr"),
-            tx.top_ngram_fraction("text", 2).alias("top2"),
-        ).collect()
-    }
+    ttr = df.select("id", tx.type_token_ratio("text").alias("ttr"))
+    top2 = repetition_profile(df, id_col="id", n=2).select(
+        "id", F.col("top_2gram_fraction").alias("top2")
+    )
+    got = {r["id"]: r for r in ttr.join(top2, "id").collect()}
     # "a b a b a b": 6 tokens, 2 distinct; bigrams [ab,ba,ab,ba,ab] -> top 3/5
     assert got[1]["ttr"] == pytest.approx(2 / 6, abs=1e-4)
     assert got[1]["top2"] == pytest.approx(3 / 5, abs=1e-4)
@@ -708,40 +634,6 @@ def test_distributed_ntile_fewer_rows_than_tiles(spark):
     assert got == [(1, 2), (2, 3), (3, 1)]
 
 
-def test_sorted_write_prunes_row_groups(spark, tmp_path):
-    """Zone-map pruning: the same selective filter over the same rows
-    must scan far fewer rows from a sort-clustered layout (tight
-    per-row-group min/max) than from a shuffled one."""
-    from pyspark.sql import functions as F
-
-    from finance_reporting_etl_spark.operators import scale
-
-    df = spark.range(100_000).select(
-        F.col("id").alias("k"), (F.col("id") % 997).alias("v")
-    )
-    unsorted_p, sorted_p = str(tmp_path / "unsorted"), str(tmp_path / "sorted")
-    # scatter k across every row group (hash shuffle) for the bad layout
-    df.repartition(8, "v").write.option("parquet.block.size", 64 * 1024).parquet(
-        unsorted_p
-    )
-    scale.write_sorted(df, sorted_p, ["k"], n_files=8, row_group_bytes=64 * 1024)
-
-    pred = (F.col("k") >= 50_000) & (F.col("k") < 53_000)
-    n_un = spark.read.parquet(unsorted_p).filter(pred).count()
-    n_so = spark.read.parquet(sorted_p).filter(pred).count()
-    assert n_un == n_so == 3_000  # identical results either way
-
-    scanned_un = scale.scan_output_rows(spark.read.parquet(unsorted_p).filter(pred))
-    scanned_so = scale.scan_output_rows(spark.read.parquet(sorted_p).filter(pred))
-    # hash layout still reads 10x+ the matching rows (each shuffle task
-    # receives ids in order, so some incidental clustering survives —
-    # row groups tile rather than fully span the domain); the sorted
-    # layout reads only the covering row groups.
-    assert scanned_un >= 10 * n_un
-    assert scanned_so <= scanned_un / 4
-    assert scanned_so < 2.5 * n_so  # tight: a few thousand-row groups
-
-
 def test_exact_group_quantiles_matches_native_percentile(spark):
     from pyspark.sql import functions as F
 
@@ -868,27 +760,6 @@ def test_score_embeddings_matches_numpy(spark):
         assert abs(got[i] - round(float(want), 6)) < 1e-9
 
 
-def test_compact_partition_reduces_files_keeps_rows(spark, tmp_path):
-    import os
-
-    from finance_reporting_etl_spark.operators.incremental import compact_partition
-
-    base = str(tmp_path / "t")
-    df = spark.createDataFrame(
-        [("2024-01-01", i, float(i)) for i in range(1000)], "d string, k long, v double"
-    )
-    # simulate micro-batch appends: many small files in one partition
-    for _ in range(6):
-        df.repartition(8).write.mode("append").partitionBy("d").parquet(base)
-    part = f"{base}/d=2024-01-01"
-    before = sum(1 for f in os.listdir(part) if f.endswith(".parquet"))
-    assert before >= 48
-    n = compact_partition(spark, base, "d", "2024-01-01", target_bytes=1 << 30)
-    after = sum(1 for f in os.listdir(part) if f.endswith(".parquet"))
-    assert n == after == 1
-    assert spark.read.parquet(base).count() == 6000
-
-
 def test_ivfpq_recall_and_determinism(spark, emb):
     """IVF-PQ: ADC ranking over 16x64 codebooks must still surface true
     euclidean neighbors (the fixture embeddings are unit-norm, so cosine
@@ -959,58 +830,11 @@ def test_cms_sketch_merge_and_overestimate(spark, sf_dir):
     assert a == b
 
 
-def test_zorder_write_prunes_both_columns(spark, tmp_path):
-    """Morton layout: selective filters on EITHER interleaved column
-    must prune row groups, where a single-column sort only prunes its
-    own column. Uses a 256x256 uniform grid so both dimensions matter."""
-    from pyspark.sql import functions as F
-
-    from finance_reporting_etl_spark.operators import scale
-
-    n = 1 << 16
-    df = spark.range(n).select(
-        # bit-reversed pairing decorrelates x and y so neither sort
-        # order accidentally clusters the other column
-        (F.col("id") % 256).alias("x"),
-        F.pmod(F.xxhash64("id"), F.lit(256)).alias("y"),
-        F.col("id").alias("payload"),
-    )
-    sorted_p, z_p = str(tmp_path / "xsorted"), str(tmp_path / "zorder")
-    scale.write_sorted(df, sorted_p, ["x"], n_files=4, row_group_bytes=48 * 1024)
-    scale.write_zordered(df, z_p, "x", "y", bits=8, n_files=4, row_group_bytes=48 * 1024)
-
-    pred_x = (F.col("x") >= 16) & (F.col("x") < 32)
-    pred_y = (F.col("y") >= 16) & (F.col("y") < 32)
-    for p in (sorted_p, z_p):  # identical results under both layouts
-        got = spark.read.parquet(p)
-        assert got.filter(pred_x).count() == df.filter(pred_x).count()
-        assert got.filter(pred_y).count() == df.filter(pred_y).count()
-
-    sx = scale.scan_output_rows(spark.read.parquet(sorted_p).filter(pred_x))
-    sy = scale.scan_output_rows(spark.read.parquet(sorted_p).filter(pred_y))
-    zx = scale.scan_output_rows(spark.read.parquet(z_p).filter(pred_x))
-    zy = scale.scan_output_rows(spark.read.parquet(z_p).filter(pred_y))
-    match = df.filter(pred_x).count()
-    # x-sorted layout: near-perfect on x, useless on y (reads ~all rows)
-    assert sx < 4 * match
-    assert sy > n // 2
-    # z-ordered: both columns prune meaningfully (each row group covers
-    # a small square); neither is as tight as a dedicated sort, but y
-    # improves by multiples over the x-sorted layout
-    assert zx < sy / 2
-    assert zy < sy / 2
-    # absolute bound is loose on purpose: parquet flushes row groups on
-    # an in-memory size estimate, so group boundaries (and thus zone-map
-    # tightness) shift run-to-run — the comparative claims above are the
-    # real guarantee
-    assert max(zx, zy) < n // 2
-
-
 def test_asof_forward_strict_and_tiebreak(spark):
     """Forward as-of edge cases: strictly-after (equal-ts right row is
     invisible), nearest following wins, lowest tiebreak wins among
     equal-ts rights, and no-following-row -> NULLs."""
-    from finance_reporting_etl_spark.operators.asof import asof_join_forward
+    from finance_reporting_etl_spark.operators.asof import asof_join
 
     left = spark.createDataFrame(
         [(1, 10, 100), (1, 20, 101), (2, 5, 102)], "k long, ts long, lid long"
@@ -1021,8 +845,8 @@ def test_asof_forward_strict_and_tiebreak(spark):
     )
     out = {
         r.lid: (r.ts_r, r.rid_r)
-        for r in asof_join_forward(
-            left, right, ["k"], right_cols=["rid"], tiebreak="rid"
+        for r in asof_join(
+            left, right, ["k"], right_cols=["rid"], tiebreak="rid", direction="forward"
         ).collect()
     }
     # ts=10 right row excluded (strict >): nearest following is ts=12,
@@ -1433,42 +1257,6 @@ def test_asof_cogroup_handles_empty_sides(spark):
     assert got[1] == (10, 9)  # inclusive match, max-tiebreak among equal ts
     assert got[2] == (None, None)  # no right rows for key 2
     assert 3 not in got  # right-only key emits nothing
-
-
-def test_forget_keys_rewrites_only_affected_partitions(spark, tmp_path):
-    """Right-to-be-forgotten: the subjects' rows vanish, only the
-    partitions that contained them are rewritten, and untouched
-    partitions keep their files byte-for-byte (same file names)."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from finance_reporting_etl_spark.operators.incremental import forget_keys
-
-    path = str(tmp_path / "t")
-    df = spark.createDataFrame(
-        [(d, u, int(d[1]) * 10 + u) for d in ("d1", "d2", "d3") for u in (1, 2, 3)],
-        "day string, user_id bigint, v bigint",
-    )
-    df.write.partitionBy("day").parquet(path)
-    # user 9 only exists nowhere; user 1 exists in every partition ->
-    # rewrite all; instead forget a user present in d1 only
-    extra = spark.createDataFrame([("d1", 99, 0)], "day string, user_id bigint, v bigint")
-    extra.write.mode("append").partitionBy("day").parquet(path)
-
-    def files(day):
-        d = os.path.join(path, f"day={day}")
-        return sorted(f for f in os.listdir(d) if f.endswith(".parquet"))
-
-    before_d2 = files("d2")
-    n = forget_keys(spark, path, "day", "user_id", [99])
-    assert n == 1  # only d1 contained user 99
-    back = spark.read.parquet(path)
-    assert back.filter(F.col("user_id") == 99).count() == 0
-    assert back.count() == 9  # everyone else survives
-    assert files("d2") == before_d2  # untouched partition: same files
-    # forgetting an absent key rewrites nothing
-    assert forget_keys(spark, path, "day", "user_id", [12345]) == 0
 
 
 def test_distributed_cumsum_equals_global_window(spark):
@@ -2143,25 +1931,6 @@ def test_table_diff_null_columns_match(spark):
     c = spark.createDataFrame([("x", None), ("y", 1)], "k string, v int")
     d = {(r.side, r.k, r.v) for r in table_diff(a, c).collect()}
     assert d == {("a_only", None, 2)}
-
-
-def test_forget_keys_preserves_null_keyed_rows(spark, tmp_path):
-    """A GDPR delete must not destroy NULL-keyed (anonymous) rows in
-    rewritten partitions (r5 review: ~isin is NULL for NULL keys)."""
-    from finance_reporting_etl_spark.operators.incremental import forget_keys
-
-    path = str(tmp_path / "t")
-    df = spark.createDataFrame(
-        [(1, "d1", 10.0), (2, "d1", 20.0), (None, "d1", 30.0), (3, "d2", 40.0)],
-        "user_id long, day string, v double",
-    )
-    df.write.partitionBy("day").parquet(path)
-    n = forget_keys(spark, path, "day", "user_id", [1])
-    assert n == 1
-    left = {
-        (r.user_id, r.v) for r in spark.read.parquet(path).collect()
-    }
-    assert left == {(2, 20.0), (None, 30.0), (3, 40.0)}
 
 
 def test_checked_swap_refuses_orphan_backup():

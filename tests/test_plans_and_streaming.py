@@ -262,6 +262,23 @@ def test_streaming_merge_upsert_restores_state_left_aside(spark, sf_dir, tmp_pat
     assert want.exceptAll(got).count() == 0
 
 
+def test_overwrite_state_dir_refuses_orphan_backup(spark, tmp_path):
+    """With only ``<state>__old`` on disk (a crash between the swap's
+    two renames), a write must refuse: ``__old`` is the last committed
+    state, and swapping new state in beside it would strand it."""
+    import os
+
+    from finance_reporting_etl_spark.streaming.merge import overwrite_state_dir
+
+    state = str(tmp_path / "state")
+    spark.createDataFrame([(1, 10)], "k long, v long").write.parquet(state + "__old")
+    with pytest.raises(IOError, match="only copy"):
+        overwrite_state_dir(spark.createDataFrame([(2, 20)], "k long, v long"), state)
+    assert not os.path.exists(state)
+    kept = spark.read.parquet(state + "__old").collect()
+    assert sorted(map(tuple, kept)) == [(1, 10)]
+
+
 def test_streaming_restart_resumes_exactly_once(spark, sf_dir, tmp_path):
     """Checkpoint recovery is the exactly-once contract: a restarted
     query must pick up ONLY unprocessed files (no re-emission of prior

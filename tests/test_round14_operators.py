@@ -14,8 +14,9 @@ from pyspark.sql import functions as F
 from finance_reporting_etl_spark.operators.corpus import md5_bucket
 from finance_reporting_etl_spark.operators.dedup import (
     incremental_clusters,
-    jaccard_cross_pairs,
-    jaccard_pairs,
+    jaccard_incident_pairs_prepped,
+    jaccard_pairs_prepped,
+    jaccard_prep,
     near_dup_clusters,
 )
 from finance_reporting_etl_spark.operators.similarity import (
@@ -31,18 +32,39 @@ def _docs(spark):
     return _read_parquet(spark, f"{SF_SMOKE}/documents.parquet")
 
 
+_BLOCKS = ("lang", "source")
+
+
+def _split_prep(spark):
+    """The documents' jaccard prep, flagged 1 for the delta (md5 bucket
+    < 32) and 0 for the base, as the cluster-maintenance queries split
+    it; returns (all, base, delta)."""
+    docs = _docs(spark)
+    flag = (md5_bucket("doc_id", salt="clmaint") < 32).cast("int").alias("__isd")
+    prepped = jaccard_prep(docs.withColumn("__isd", flag), block_cols=(*_BLOCKS, "__isd"))
+    prepped = prepped.localCheckpoint()
+    return prepped, prepped.filter("__isd = 0"), prepped.filter("__isd = 1")
+
+
+def _pairs(toks):
+    return jaccard_pairs_prepped(toks, block_cols=_BLOCKS, threshold=0.5)
+
+
+def _delta_incident_pairs(prepped, delta):
+    return jaccard_incident_pairs_prepped(
+        delta, prepped, "__isd", block_cols=_BLOCKS, threshold=0.5
+    )
+
+
 # --- incremental near-dup cluster maintenance --------------------------------
 
 
 def test_cross_plus_self_pairs_partition_the_full_pair_set(spark):
     """The incremental == batch equivalence rests on the edge-set
-    partition: (delta×base cross pairs) ∪ (delta self-pairs) ∪ (base
-    self-pairs) must be EXACTLY jaccard_pairs over the whole corpus —
+    partition: (delta-incident pairs: delta×base ∪ delta self-pairs) ∪
+    (base self-pairs) must be EXACTLY the pairs over the whole corpus —
     same pairs, same rounded scores, nothing dropped or doubled."""
-    docs = _docs(spark)
-    bd = md5_bucket("doc_id", salt="clmaint")
-    base, delta = docs.filter(bd >= 32), docs.filter(bd < 32)
-    kw = dict(block_cols=("lang", "source"), threshold=0.5)
+    prepped, base, delta = _split_prep(spark)
 
     def norm(df):
         return {
@@ -50,13 +72,11 @@ def test_cross_plus_self_pairs_partition_the_full_pair_set(spark):
             for r in df.collect()
         }
 
-    full = norm(jaccard_pairs(docs, **kw))
-    parts = (
-        norm(jaccard_cross_pairs(delta, base, **kw))
-        | norm(jaccard_pairs(delta, **kw))
-        | norm(jaccard_pairs(base, **kw))
-    )
+    full = norm(_pairs(prepped))
+    incident = _delta_incident_pairs(prepped, delta)
+    parts = norm(incident) | norm(_pairs(base))
     assert parts == full and len(full) > 0
+    assert incident.count() + _pairs(base).count() == len(full)
 
 
 def test_incremental_clusters_equal_full_recompute(spark):
@@ -64,30 +84,21 @@ def test_incremental_clusters_equal_full_recompute(spark):
     only delta-incident edges must reproduce the full recompute's
     labels for EVERY doc (base and delta) — the operator-grain twin of
     the near_dup_cluster_maintain oracle."""
-    docs = _docs(spark)
-    bd = md5_bucket("doc_id", salt="clmaint")
-    base, delta = docs.filter(bd >= 32), docs.filter(bd < 32)
-    kw = dict(block_cols=("lang", "source"), threshold=0.5)
-    nodes = docs.select(F.col("doc_id").alias("id"))
+    prepped, base, delta = _split_prep(spark)
 
     full = {
         r.id: r.cluster_id
         for r in near_dup_clusters(
-            jaccard_pairs(docs, **kw).select("id_a", "id_b"), nodes
+            _pairs(prepped).select("id_a", "id_b"), prepped.select("id")
         ).collect()
     }
-    base_cl = near_dup_clusters(
-        jaccard_pairs(base, **kw).select("id_a", "id_b"),
-        base.select(F.col("doc_id").alias("id")),
-    )
+    base_cl = near_dup_clusters(_pairs(base).select("id_a", "id_b"), base.select("id"))
     inc = {
         r.id: r.cluster_id
         for r in incremental_clusters(
             base_cl,
-            jaccard_cross_pairs(delta, base, **kw)
-            .select("id_a", "id_b")
-            .unionByName(jaccard_pairs(delta, **kw).select("id_a", "id_b")),
-            delta.select(F.col("doc_id").alias("id")),
+            _delta_incident_pairs(prepped, delta).select("id_a", "id_b"),
+            delta.select("id"),
         ).collect()
     }
     assert inc == full
@@ -196,9 +207,7 @@ def test_streaming_cluster_maintain_equals_batch_recompute(spark):
     full = {
         r.id: r.cluster_id
         for r in near_dup_clusters(
-            jaccard_pairs(
-                docs, block_cols=("lang", "source"), threshold=0.5
-            ).select("id_a", "id_b"),
+            _pairs(jaccard_prep(docs, block_cols=_BLOCKS)).select("id_a", "id_b"),
             docs.select(F.col("doc_id").alias("id")),
         ).collect()
     }

@@ -3,7 +3,52 @@ join must equal the two legs it replaced, pair for pair."""
 
 from __future__ import annotations
 
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from finance_reporting_etl_spark.functions.scalars import det_round
+
+
+def jaccard_cross_pairs_prepped(
+    delta_toks: DataFrame,
+    base_toks: DataFrame,
+    block_cols: tuple[str, ...] = (),
+    threshold: float = 0.5,
+    scale: int = 4,
+) -> DataFrame:
+    """Reference for the fused join: exact Jaccard of every delta x base
+    pair of two ``jaccard_prep`` frames, blocked and size-prefiltered
+    like ``jaccard_pairs_prepped``."""
+
+    def _tag(df: DataFrame, tag: str):
+        return df.select(
+            F.col("id").alias(f"id_{tag}"),
+            *[F.col(c).alias(f"{c}_{tag}") for c in block_cols],
+            F.col("toks").alias(f"toks_{tag}"),
+            F.col("n_toks").alias(f"n_toks_{tag}"),
+        )
+
+    a, b = _tag(delta_toks, "a"), _tag(base_toks, "b")
+    cond = F.lit(True)
+    for c in block_cols:
+        cond = cond & (F.col(f"{c}_a") == F.col(f"{c}_b"))
+    cond = (
+        cond
+        & (F.col("n_toks_b") >= F.ceil(F.col("n_toks_a") * F.lit(threshold)))
+        & (F.col("n_toks_a") >= F.ceil(F.col("n_toks_b") * F.lit(threshold)))
+    )
+    inter = F.size(F.array_intersect(F.col("toks_a"), F.col("toks_b")))
+    union = F.col("n_toks_a") + F.col("n_toks_b") - inter
+    jac = inter / F.nullif(union.cast("double"), F.lit(0.0))
+    return (
+        a.join(b, cond)
+        .select(
+            F.col("id_a"),
+            F.col("id_b"),
+            det_round(jac, scale).alias("jaccard"),
+        )
+        .filter(F.col("jaccard") >= threshold)
+    )
 
 
 def test_jaccard_incident_pairs_equals_cross_union_self(spark):
@@ -12,7 +57,6 @@ def test_jaccard_incident_pairs_equals_cross_union_self(spark):
     pairs and det-rounded values, for a corpus with real blocks,
     size-filter edge cases (empty docs) and near-threshold pairs."""
     from finance_reporting_etl_spark.operators.dedup import (
-        jaccard_cross_pairs_prepped,
         jaccard_incident_pairs_prepped,
         jaccard_pairs_prepped,
         jaccard_prep,

@@ -1,5 +1,5 @@
 """Process-level state that must not leak between runs or break them: the
-co-purchase pair memo across aux-dir moves, a malformed extra-conf
+shared aux-artifact memo across aux-dir moves, a malformed extra-conf
 variable, and the default driver heap on a small host."""
 
 from __future__ import annotations
@@ -11,23 +11,36 @@ import pytest
 from pyspark.sql import SparkSession
 
 
-def test_copurchase_pairs_rebuilt_after_aux_dir_moves(spark, sf_dir, tmp_path, monkeypatch):
+def _rows(built):
+    frames = built if isinstance(built, tuple) else (built,)
+    return [sorted(df.collect()) for df in frames]
+
+
+@pytest.mark.parametrize(
+    "fn_name, artifact",
+    [("_copurchase_pairs", "copurchase_pairs"), ("_pq_tables", "pq_index")],
+    ids=["copurchase_pairs", "pq_tables"],
+)
+def test_shared_aux_rebuilt_after_aux_dir_moves(
+    spark, sf_dir, tmp_path, monkeypatch, fn_name, artifact
+):
     from finance_reporting_etl_spark import queries
 
-    monkeypatch.setattr(queries, "_COPURCHASE_CACHE", {})
+    build = getattr(queries, fn_name)
+    monkeypatch.setattr(queries, "_AUX_BUILT", {})
     monkeypatch.setattr(queries, "_AUX_DIR", str(tmp_path / "a"))
-    want = sorted(queries._copurchase_pairs(spark, sf_dir).collect())
-    assert want
+    want = _rows(build(spark, sf_dir))
+    assert all(want)
 
     # benchmark workers and run isolation move the aux dir between calls
     moved = tmp_path / "b"
     monkeypatch.setattr(queries, "_AUX_DIR", str(moved))
-    assert sorted(queries._copurchase_pairs(spark, sf_dir).collect()) == want
-    assert (moved / "copurchase_pairs").is_dir()
+    assert _rows(build(spark, sf_dir)) == want
+    assert (moved / artifact).is_dir()
 
     # a removed parquet dir is rebuilt, not read as missing
-    shutil.rmtree(moved / "copurchase_pairs")
-    assert sorted(queries._copurchase_pairs(spark, sf_dir).collect()) == want
+    shutil.rmtree(moved / artifact)
+    assert _rows(build(spark, sf_dir)) == want
 
 
 def test_malformed_extra_conf_fails_before_session_is_built(monkeypatch):

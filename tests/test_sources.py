@@ -40,8 +40,8 @@ def test_fred_flatten(spark, tmp_path):
 def test_annual_reports_flatten(spark, tmp_path):
     p = tmp_path / "av.json"
     p.write_text(json.dumps(AV_PAYLOAD))
-    df = json_source.flatten_annual_reports(
-        json_source.read_json(spark, str(p)), symbol="AAPL", report_type="income_statement"
+    df = json_source.flatten_annual_reports_batch(
+        json_source.read_json(spark, str(p)), report_type="income_statement"
     )
     rows = df.collect()
     assert len(rows) == 2
